@@ -16,17 +16,18 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
+  /** The per-query map of a [[FullBaselineFile]] body, or nothing when
+    * the `"sf"` it records is not `sfDir`: times from another scale
+    * factor would re-time (or fail to re-time) every query. */
+  private[graft] def fullBaseline(body: String, sfDir: String): Map[String, Double] =
+    if ("\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(body).exists(_.group(1) == sfDir))
+      parseBaseline(body)
+    else Map.empty
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Profiling aids (unset in driver runs — defaults preserve the
     // contract): SPARK_GRAFT_ONLY=x01,x07 runs a subset;
@@ -104,12 +105,11 @@ object Bench {
     // run — the guard is then a no-op). The re-timed names are reported
     // in the long JSON line (`retimed`).
     val baseline: Map[String, Double] = {
-      def parseFile(f: java.io.File): Map[String, Double] =
-        if (!f.isFile) Map.empty
+      def readFile(f: java.io.File): String =
+        if (!f.isFile) ""
         else {
           val txt = scala.io.Source.fromFile(f)
-          val body = try txt.mkString finally txt.close()
-          parseBaseline(body)
+          try txt.mkString finally txt.close()
         }
       val explicit = sys.env.get("SPARK_GRAFT_BASELINE").map(new java.io.File(_))
       val latest = explicit.orElse {
@@ -127,9 +127,9 @@ object Bench {
       // driver artifact fall back to it, so the guard covers the whole
       // surface. Precedence stays with the driver file (per-round
       // like-for-like); the fallback only fills holes.
-      val full = parseFile(new java.io.File(FullBaselineFile))
+      val full = fullBaseline(readFile(new java.io.File(FullBaselineFile)), sfDir)
         .filter { case (_, t) => t > 0 } // failed-run sentinels are not baselines
-      full ++ latest.map(parseFile).getOrElse(Map.empty)
+      full ++ latest.map(f => parseBaseline(readFile(f))).getOrElse(Map.empty)
         .filter { case (_, t) => t > 0 }
     }
     val retimed = scala.collection.mutable.ListBuffer.empty[String]

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library entry point: a SparkSession builder pre-configured the way
+/** Library entry point: the one session factory, configured the way
   * every graft component expects (SCALING.md §7) — what a user switching
   * from the reference stack starts from.
   *
@@ -17,12 +17,7 @@ object Graft {
     *  - AQE on (partition coalescing, skew-join splitting);
     *  - UTC session timezone (oracle/warehouse determinism);
     *  - nanos-as-long parquet reads (ns-timestamp sources);
-    *  - graft native functions registered (graft_cosine_sim, …);
-    *  - graft optimizer rules (RewriteLatestPerKey) — applied when this
-    *    call CREATES the session; getOrCreate of a pre-existing session
-    *    cannot retrofit extensions (Spark limitation — set
-    *    `spark.sql.extensions=graft.functions.GraftExtensions` on the
-    *    cluster for that case).
+    *  - graft native functions registered (graft_cosine_sim, …).
     *
     * `shufflePartitions` defaults to 2× available cores — at cluster
     * scale pass ~2-3× total executor cores and let AQE coalesce down.
@@ -39,7 +34,6 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", ui.toString)
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     graft.functions.GraftFunctions.register(spark)
     spark

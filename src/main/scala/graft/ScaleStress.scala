@@ -727,13 +727,7 @@ object ScaleStress {
       if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else defaultQueries
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_SKIP_INFLATE=1 reuses an existing inflated dir — for

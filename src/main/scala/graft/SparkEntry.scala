@@ -64,8 +64,8 @@ object SparkEntry {
     * (x76's three power steps reference the edge set ~3× each via
     * edges/outdeg/nodes) re-scan columnar storage instead of
     * re-running the join+distinct per reference, and file-scan stats
-    * keep the planner broadcasting the small sides (the IterBench
-    * persisted-input lesson, SCALING §15). */
+    * keep the planner broadcasting the small sides (the persisted-input
+    * lesson of SCALING §15). */
   private def custSupplierEdges(s: SparkSession, d: String): DataFrame = {
     val edgePath = cachePath(d, "csedges") + "/edges"
     val ep = new org.apache.hadoop.fs.Path(edgePath)
@@ -81,12 +81,30 @@ object SparkEntry {
   }
 
   private def cachePath(sfDir: String, tag: String): String = {
+    cacheDirsHook
     val base = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),
-      s"graft-p${ProcessHandle.current().pid()}-$tag-" +
-        java.lang.Integer.toHexString(sfDir.hashCode))
+      s"$cacheDirPrefix$tag-" + java.lang.Integer.toHexString(sfDir.hashCode))
     java.nio.file.Files.createDirectories(base)
     base.toString
+  }
+
+  private def cacheDirPrefix: String = s"graft-p${ProcessHandle.current().pid()}-"
+
+  /** Forced by the first [[cachePath]] call: one shutdown hook that
+    * deletes this process's cache directories. It runs after Spark's
+    * own hooks (priority below theirs), so no task still reads them. */
+  private lazy val cacheDirsHook: Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => deleteCacheDirs(), org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
+
+  /** Delete every [[cachePath]] directory of this process in
+    * `java.io.tmpdir`. */
+  private[graft] def deleteCacheDirs(): Unit = {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    Option(tmp.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith(cacheDirPrefix))
+      .foreach(f => org.apache.commons.io.FileUtils.deleteQuietly(f))
   }
 
   /** Exact-lattice money sum, replacing `round(sum(raw doubles), 2)`:
@@ -1129,7 +1147,6 @@ object SparkEntry {
     "s44_rank_ties_topk" -> ((s, d) => {
       // RANK-with-ties top-k per group: every lineitem tied at a
       // part's 3rd-highest quantity survives — the semantic row_number
-      // (and the graft TopKRows rewrite, which must NOT fire here)
       // cannot express. Quantities are integer-valued doubles, so tie
       // groups are exact and both engines cut identically.
       t(s, d, "lineitem").createOrReplaceTempView("g_lineitem")
@@ -1234,8 +1251,8 @@ object SparkEntry {
     }),
     "s40_lateral_topn" -> ((s, d) => {
       // Correlated LATERAL subquery with ORDER BY + LIMIT — the
-      // "top-n per group via join" spelling (vs the window-function
-      // spelling the RewriteLatestPerKey family optimizes). Catalyst
+      // "top-n per group via join" spelling (vs the row_number window
+      // spelling). Catalyst
       // decorrelates the lateral into a per-key window under the hood;
       // the deterministic (price DESC, key) tiebreak pins the cut.
       t(s, d, "customer").createOrReplaceTempView("g_customer")
@@ -1694,8 +1711,8 @@ object SparkEntry {
     "x65_source_cap" -> ((s, d) =>
       // per-source document cap (crawl-mix balancing): keep 10 docs per
       // source by salted-hash order — uniform and reproducible, not
-      // ingestion-order-biased. The rank-filter window rewrites to the
-      // bounded TopKRows aggregate (RewriteLatestPerKey).
+      // ingestion-order-biased. The rank-filter window plans with a
+      // partial WindowGroupLimit (≤ 10 rows per source per map task).
       graft.ext.Sampling.capPerGroup(
           t(s, d, "documents").select(col("doc_id"), col("source")),
           "source", "doc_id", "cap", 10)
@@ -3483,10 +3500,9 @@ object SparkEntry {
         "ts")),
     "x155_top_paths" -> ((s, d) =>
       // "How do users start": top-20 first-5-event sequences. The
-      // first-k selection is the row_number≤k idiom RewriteLatestPerKey
-      // upgrades to the bounded heap under the loaded extensions; path
-      // assembly folds steps in rank order; deterministic
-      // (n_users DESC, path) cut.
+      // first-k selection is the row_number≤k idiom (a partial
+      // WindowGroupLimit per user); path assembly folds steps in rank
+      // order; deterministic (n_users DESC, path) cut.
       graft.olap.Funnel.topPaths(t(s, d, "events"), "user_id", "ts",
         "event_id", "event_type", maxSteps = 5, topK = 20)),
     "x156_centroid_shift" -> ((s, d) => {

@@ -76,13 +76,8 @@ object StreamSoak {
     val nFiles = if (args.length > 1) args(1).toInt else 64
     val filesPerBatch = if (args.length > 2) args(2).toInt else 8
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-streamsoak")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("graft-streamsoak", master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt)
     try {
       val root = java.nio.file.Files.createTempDirectory("graft-soak").toString
       val inDir = s"$root/in"

@@ -206,10 +206,10 @@ object IvfIndex {
     * Shape: the k×dim centroid table broadcasts against the query set
     * (BroadcastNestedLoopJoin over k rows — NOT a shuffle), each query
     * keeps its `nProbes` best centroids via the `row_number() <= n`
-    * idiom (planned as the bounded TopKRows heap under graft
-    * extensions), the probe pairs join the assignment table ON THE
-    * CLUSTER KEY — so each query's candidate set is its probed lists
-    * only, never the corpus — and the final per-query top-k is the
+    * idiom (planned with Spark's partial `WindowGroupLimit`), the
+    * probe pairs join the assignment table ON THE CLUSTER KEY — so
+    * each query's candidate set is its probed lists only, never the
+    * corpus — and the final per-query top-k is the
     * reducing heap aggregate (k rows per query per map task cross the
     * wire). Zero-norm sims are null → excluded on both engines (x19
     * convention). A query id equal to a corpus id is NOT excluded:
@@ -275,7 +275,7 @@ object IvfIndex {
     *     integer byte-lane loop ([[graft.functions.Int8CosineSim]];
     *     symmetric-quantization scales cancel under cosine);
     *  3. keep `rerank` approximate-best candidates per query (the
-    *     bounded TopKRows heap — `rerank` rows per query cross the
+    *     bounded `topKBy` heap — `rerank` rows per query cross the
     *     wire, never the candidate lists);
     *  4. EXACT float re-rank of the survivors only: one id-equi-join
     *     back to the float assignment — at scale the only touch of the
@@ -327,8 +327,8 @@ object IvfIndex {
       .filter(col("_asim").isNotNull)
     // stage 3: per-query rerank cut as the REDUCING topKBy heap
     // (map-side partial, ≤ rerank rows per query per task cross the
-    // wire) — NOT a row_number window: without the optimizer rewrite
-    // loaded, that plans as a full Sort of every candidate, measured 3×
+    // wire) — NOT a row_number window: that plans as a Sort of every
+    // candidate, measured 3×
     // slower than the flat path at 100× on the staged layout. Tie rule
     // (asim DESC, neighbor_id ASC) matches the window formulation.
     val survivors = approx

@@ -26,10 +26,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the hash projection is narrow; `distinct` on
   * (group, h) is one exchange that map-side combines; the bottom-k per
-  * group is written as the `row_number ≤ k` idiom, which
-  * [[graft.plans.RewriteLatestPerKey]] plans as the bounded-heap
-  * `TopKRows` aggregate — k longs per group cross the wire, never the
-  * distinct-value stream. Global (ungrouped) sketches go through
+  * group is written as the `row_number ≤ k` idiom, which Spark plans
+  * with a partial `WindowGroupLimit` — at most k longs per group leave
+  * each map task, never the distinct-value stream. Global (ungrouped) sketches go through
   * [[kmvSketchSharded]]: bottom-k within 256 deterministic hash shards,
   * then one tiny merge — identical result (bottom-k of a union IS
   * bottom-k of per-shard bottom-k's), no single-reducer sort.
@@ -104,10 +103,9 @@ object Sketches {
   def kmvEstimate(sketch: DataFrame, k: Int): DataFrame =
     sketch.withColumn("distinct_est", kmvEstimateCol(col("kmv"), k))
 
-  /** rn ≤ k over (group ORDER BY h) → collect ascending. The window is
-    * the RewriteLatestPerKey-recognized idiom: planned as the TopKRows
-    * bounded heap when graft extensions are loaded — no per-group sort,
-    * k longs per group on the wire. An empty `groupCols` degenerates to
+  /** rn ≤ k over (group ORDER BY h) → collect ascending. Spark plans
+    * the grouped window with a partial `WindowGroupLimit`: at most k
+    * longs per group leave each map task. An empty `groupCols` degenerates to
     * one global partition (callers with large distinct sets use
     * [[kmvSketchSharded]] instead). */
   private def bottomK(hashed: DataFrame, groupCols: Seq[String],

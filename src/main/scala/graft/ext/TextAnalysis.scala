@@ -340,11 +340,10 @@ object TextAnalysis {
     * Scale shape: tf = one (doc, term) aggregation; df = one term
     * aggregation over the (already collapsed) tf rows; the tf⋈df join
     * shuffles on the term — at corpus scale the df side is vocabulary-
-    * sized and AQE broadcast-joins it. The per-doc top-k is written as
-    * the row_number idiom so [[graft.plans.RewriteLatestPerKey]] plans
-    * it as a bounded-heap TopKRows aggregate (no full per-doc sort)
-    * when the graft extensions are loaded; unoptimized it is still one
-    * window over the (doc, term) rows. */
+    * sized and AQE broadcast-joins it. The per-doc top-k is the
+    * row_number idiom: one window over the (doc, term) rows, which
+    * Spark plans with a partial `WindowGroupLimit` (at most k rows per
+    * doc leave each map task). */
   def salientTerms(df: DataFrame, textCol: String, idCol: String,
                    k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -570,11 +570,9 @@ object TextDedup {
     * multiplicity by contract (ten copies of a page → 45 pairs each),
     * and while the grouped consumers (dup groups / keep-best) are the
     * recommended scale path, a pipeline that materializes raw pairs
-    * needs its own ceiling. Expressed as the `row_number() <= k` idiom
-    * so `RewriteLatestPerKey` plans it as the bounded-heap TopKRows
-    * aggregate (k rows per anchor per map task cross the wire) on
-    * sessions with graft extensions; elsewhere it degrades gracefully
-    * to the window form with identical output. */
+    * needs its own ceiling. Expressed as the `row_number() <= k` idiom,
+    * which Spark plans with a partial `WindowGroupLimit` (at most k
+    * rows per anchor leave each map task). */
   private def capPairs(pairs: DataFrame, max: Int, order: Column): DataFrame =
     if (max <= 0) pairs
     else {

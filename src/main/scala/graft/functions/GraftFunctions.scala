@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GetStructField}
 import org.apache.spark.sql.functions.call_function
 
 /** Registration for graft's native Catalyst expressions.
@@ -227,62 +227,46 @@ object GraftFunctions {
 
   val structAtBuilder: Seq[Expression] => Expression = {
     case Seq(child, org.apache.spark.sql.catalyst.expressions.Literal(i: Int, _)) =>
-      org.apache.spark.sql.catalyst.expressions.GetStructField(child, i)
+      GetStructField(child, i)
     case _ => throw new IllegalArgumentException(
       "graft_struct_at takes (struct, ordinal int literal)")
   }
 
+  /** Every graft function, as (SQL name, builder, expression class
+    * name): the one list both [[register]] and [[GraftExtensions]]
+    * install from. */
+  val table: Seq[(String, Seq[Expression] => Expression, String)] = Seq(
+    ("graft_bloom_might_contain", bloomBuilder, classOf[BloomMightContain].getName),
+    ("graft_bloom_build", bloomBuildBuilder, classOf[BloomBuildLong].getName),
+    ("graft_vecsum", vecSumBuilder, classOf[VectorSumLong].getName),
+    ("graft_quantize_int8", quantizeBuilder, classOf[QuantizeInt8].getName),
+    ("graft_lsh_bucket", lshBucketBuilder, classOf[LshBucket64].getName),
+    ("graft_cosine_sim", cosineSimBuilder, classOf[CosineSimilarity].getName),
+    ("graft_simhash64", simHashBuilder, classOf[SimHash64].getName),
+    ("graft_minhash64", minHashBuilder, classOf[MinHash64].getName),
+    ("graft_topk_by", topKByBuilder, classOf[TopKByDouble].getName),
+    ("graft_heavy_hitters", heavyHittersBuilder, classOf[MisraGries].getName),
+    ("graft_shingles", shinglesBuilder, classOf[Shingles].getName),
+    ("graft_repetition_ok", repetitionOkBuilder, classOf[RepetitionOk].getName),
+    ("graft_bloom_contains_any", bloomContainsAnyBuilder, classOf[BloomContainsAny].getName),
+    ("graft_struct_at", structAtBuilder, classOf[GetStructField].getName),
+    ("graft_kll_quantiles", kllQuantilesBuilder, classOf[KllQuantiles].getName),
+    ("graft_kll_quantiles_cont", kllQuantilesContBuilder, classOf[KllQuantiles].getName),
+    ("graft_kll_sketch", kllSketchBuilder, classOf[KllSketch].getName),
+    ("graft_int8_pack", int8PackBuilder, classOf[QuantizeInt8Pack].getName),
+    ("graft_int8_cosine", int8CosineBuilder, classOf[Int8CosineSim].getName),
+    ("graft_kll_merge", kllMergeBuilder, classOf[KllMerge].getName),
+    ("graft_kll_values", kllValuesBuilder, classOf[KllValues].getName),
+    ("graft_kll_values_cont", kllValuesContBuilder, classOf[KllValues].getName),
+    ("graft_pos_sum", posSumBuilder, classOf[PosOrderedSum].getName),
+    ("graft_bpe_apply", bpeApplyBuilder, classOf[BpeApply].getName))
+
   /** Register graft functions in an existing session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain", bloomBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_build", bloomBuildBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vecsum", vecSumBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quantize_int8", quantizeBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_bucket", lshBucketBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine_sim", cosineSimBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", simHashBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash64", minHashBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk_by", topKByBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavy_hitters", heavyHittersBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", shinglesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repetition_ok", repetitionOkBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains_any", bloomContainsAnyBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_struct_at", structAtBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_quantiles", kllQuantilesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_quantiles_cont", kllQuantilesContBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_sketch", kllSketchBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_int8_pack", int8PackBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_int8_cosine", int8CosineBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_merge", kllMergeBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_values", kllValuesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_values_cont", kllValuesContBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pos_sum", posSumBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_apply", bpeApplyBuilder, "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    table.foreach { case (name, builder, _) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "scala_udf")
+    }
 
   /** Column API for the mergeable KLL quantile aggregate; registers
     * lazily. Exact while n ≤ k (no compaction); O(n/k) rank error
@@ -494,91 +478,12 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions` entry point: injects graft's functions and
-  * optimizer rules into every session built on the cluster (SURVEY §2.9
-  * extension path). */
+/** `spark.sql.extensions` entry point: injects graft's functions into
+  * every session built on the cluster (SURVEY §2.9 extension path). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => graft.plans.RewriteLatestPerKey)
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine_sim"),
-      GraftFunctions.cosineSimBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      GraftFunctions.simHashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash64"),
-      new ExpressionInfo(classOf[MinHash64].getName, "graft_minhash64"),
-      GraftFunctions.minHashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk_by"),
-      new ExpressionInfo(classOf[TopKByDouble].getName, "graft_topk_by"),
-      GraftFunctions.topKByBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[Shingles].getName, "graft_shingles"),
-      GraftFunctions.shinglesBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_repetition_ok"),
-      new ExpressionInfo(classOf[RepetitionOk].getName, "graft_repetition_ok"),
-      GraftFunctions.repetitionOkBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName,
-        "graft_bloom_might_contain"),
-      GraftFunctions.bloomBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_vecsum"),
-      new ExpressionInfo(classOf[VectorSumLong].getName, "graft_vecsum"),
-      GraftFunctions.vecSumBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_build"),
-      new ExpressionInfo(classOf[BloomBuildLong].getName, "graft_bloom_build"),
-      GraftFunctions.bloomBuildBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_quantize_int8"),
-      new ExpressionInfo(classOf[QuantizeInt8].getName, "graft_quantize_int8"),
-      GraftFunctions.quantizeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_lsh_bucket"),
-      new ExpressionInfo(classOf[LshBucket64].getName, "graft_lsh_bucket"),
-      GraftFunctions.lshBucketBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains_any"),
-      new ExpressionInfo(classOf[BloomContainsAny].getName,
-        "graft_bloom_contains_any"),
-      GraftFunctions.bloomContainsAnyBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_struct_at"),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.GetStructField",
-        "graft_struct_at"),
-      GraftFunctions.structAtBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_quantiles"),
-      new ExpressionInfo(classOf[KllQuantiles].getName, "graft_kll_quantiles"),
-      GraftFunctions.kllQuantilesBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_sketch"),
-      new ExpressionInfo(classOf[KllSketch].getName, "graft_kll_sketch"),
-      GraftFunctions.kllSketchBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_int8_pack"),
-      new ExpressionInfo(classOf[QuantizeInt8Pack].getName, "graft_int8_pack"),
-      GraftFunctions.int8PackBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_int8_cosine"),
-      new ExpressionInfo(classOf[Int8CosineSim].getName, "graft_int8_cosine"),
-      GraftFunctions.int8CosineBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_merge"),
-      new ExpressionInfo(classOf[KllMerge].getName, "graft_kll_merge"),
-      GraftFunctions.kllMergeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kll_values"),
-      new ExpressionInfo(classOf[KllValues].getName, "graft_kll_values"),
-      GraftFunctions.kllValuesBuilder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach { case (name, builder, className) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(className, name), builder))
+    }
 }

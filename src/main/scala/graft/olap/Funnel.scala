@@ -113,11 +113,9 @@ object Funnel {
     * fixed funnel and the transition matrix's one-step view).
     *
     * The per-user first-k selection is the `row_number() ≤ k` idiom on
-    * the (ts, id)-totalized order — exactly what `RewriteLatestPerKey`
-    * upgrades to the bounded TopKRows heap when the graft extensions
-    * are loaded (map tasks then ship ≤ k rows per user); in a plain
-    * session it falls back to the same per-user window sort the
-    * transition matrix already pays. Path assembly folds the ≤ k
+    * the (ts, id)-totalized order, which Spark plans with a partial
+    * `WindowGroupLimit` (map tasks ship ≤ k rows per user) ahead of
+    * the per-user window sort. Path assembly folds the ≤ k
     * steps in rank order; the final cut is a deterministic
     * (n_users DESC, path) top-K.
     *

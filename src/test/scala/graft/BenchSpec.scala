@@ -32,4 +32,18 @@ class BenchSpec extends AnyFunSuite {
       assert(real.size > 20 && real.values.forall(v => v > 0 && v < 600), real.size.toString)
     }
   }
+
+  test("fullBaseline keeps the full map only when it was recorded on the " +
+    "benched sf dir") {
+    val body =
+      """{"queries":{"q01_count_by_type":0.3,"x111_incremental_mv":3.7},"repeat":2,"single_pass_total":4.0,"sf":"/data/sf0.1"}"""
+    assert(Bench.fullBaseline(body, "/data/sf0.1") ==
+      Map("q01_count_by_type" -> 0.3, "x111_incremental_mv" -> 3.7))
+    // an sf0.01 run must not be re-timed against sf0.1 times
+    assert(Bench.fullBaseline(body, "/data/sf0.01") == Map.empty)
+    // a map that records no sf matches no run
+    assert(Bench.fullBaseline("""{"queries":{"q01_count_by_type":0.3}}""",
+      "/data/sf0.1") == Map.empty)
+    assert(Bench.fullBaseline("", "/data/sf0.1") == Map.empty)
+  }
 }

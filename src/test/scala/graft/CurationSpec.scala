@@ -234,7 +234,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("capPerGroup: exactly k per big group, small groups intact, " +
-    "deterministic and TopKRows-rewritten (x65)") {
+    "deterministic and WindowGroupLimit-bounded (x65)") {
     val rows = ((1L to 30L).map(i => (i, "big")) ++
       Seq((100L, "small"), (101L, "small"))).toDF("id", "grp")
     val out = graft.ext.Sampling.capPerGroup(rows, "grp", "id", "s", 5)

@@ -152,28 +152,6 @@ object PipelineProperties extends Properties("graft") {
       heap.sortedDesc.toSeq == want
     }
 
-  property("TopKRows heap keeps exactly the k best keys, both directions") =
-    forAll(Gen.listOf(Gen.zip(Gen.option(Gen.choose(-5L, 5L)), Gen.choose(0L, 1000L))),
-      Gen.choose(1, 6), Gen.oneOf(true, false)) { (rows, k, asc) =>
-      import org.apache.spark.sql.catalyst.InternalRow
-      // the rewrite's key shape: (isnotnull, value)
-      val ord = org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .createNaturalAscendingOrdering(Seq(
-          org.apache.spark.sql.types.BooleanType,
-          org.apache.spark.sql.types.LongType))
-      val heap = new graft.functions.TopKRows.Heap(k, ord, asc)
-      rows.foreach { case (key, id) =>
-        heap.insert(InternalRow(key.isDefined, key.getOrElse(0L)), InternalRow(id))
-      }
-      def tup(key: Option[Long]) = (key.isDefined, key.getOrElse(0L))
-      val sortedAll = rows.map(r => tup(r._1)).sorted
-      val expected = (if (asc) sortedAll else sortedAll.reverse).take(k)
-      var kept = List.empty[(Boolean, Long)]
-      heap.foreach((kr, _) => kept ::= ((kr.getBoolean(0), kr.getLong(1))))
-      // ties rank arbitrarily, so compare the kept KEY multiset
-      kept.sorted == expected.sorted
-    }
-
   // -- ext.Relational: randomized equivalence vs driver-side references.
   // Small key/time spaces force the interesting collisions (same-time
   // ties, same-key pileups, keys on only one side).
