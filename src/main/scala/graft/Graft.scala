@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   *
   * {{{
   * val spark = Graft.session("my-pipeline", master = "local[32]")
-  * val routed = graft.ingest.ValidateRoute.plan(raw, graft.schema.Schemas.specs)
+  * val routed = graft.ingest.ValidateRoute.planSinglePass(raw, graft.schema.Schemas.specs)
   * }}}
   */
 object Graft {

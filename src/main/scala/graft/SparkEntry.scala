@@ -297,8 +297,8 @@ object SparkEntry {
     }),
     "v03_single_pass_route" -> ((s, d) => {
       // v00's pipeline through the SINGLE-PASS demux (one merged-schema
-      // from_json, per-topic CASE dispatch, one source scan per route —
-      // the 100 TB shape; plan() reads the source once per topic
+      // from_json, the per-topic TopicRoute kernel, one source scan per
+      // route — the 100 TB shape; plan() reads the source once per topic
       // branch). Same oracle as v00: the routes must be identical.
       val spec = TopicSpec("events",
         org.apache.spark.sql.types.StructType(

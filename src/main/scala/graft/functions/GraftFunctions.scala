@@ -232,6 +232,26 @@ object GraftFunctions {
       "graft_struct_at takes (struct, ordinal int literal)")
   }
 
+  val topicRouteBuilder: Seq[Expression] => Expression = {
+    case Seq(org.apache.spark.sql.catalyst.expressions.Literal(
+        out: org.apache.spark.unsafe.types.UTF8String,
+        _: org.apache.spark.sql.types.StringType),
+        topic, data, ingestedAt, kafkaTs, jsonStr,
+        org.apache.spark.sql.catalyst.expressions.Literal(
+          tables: Array[Byte], org.apache.spark.sql.types.BinaryType)) =>
+      TopicRoute(out.toString, Seq(topic, data, ingestedAt, kafkaTs, jsonStr),
+        TopicRoute.decode(tables))
+    case _ => throw new IllegalArgumentException(
+      "graft_topic_route takes (output string literal, topic, data struct, " +
+        "ingested_at, kafka_ts, json_str, tables binary literal)")
+  }
+
+  val referencedConstantBuilder: Seq[Expression] => Expression = {
+    case Seq(c) => ReferencedConstant(c)
+    case other => throw new IllegalArgumentException(
+      s"graft_referenced_constant takes 1 argument, got ${other.size}")
+  }
+
   /** Every graft function, as (SQL name, builder, expression class
     * name): the one list both [[register]] and [[GraftExtensions]]
     * install from. */
@@ -259,7 +279,10 @@ object GraftFunctions {
     ("graft_kll_values", kllValuesBuilder, classOf[KllValues].getName),
     ("graft_kll_values_cont", kllValuesContBuilder, classOf[KllValues].getName),
     ("graft_pos_sum", posSumBuilder, classOf[PosOrderedSum].getName),
-    ("graft_bpe_apply", bpeApplyBuilder, classOf[BpeApply].getName))
+    ("graft_bpe_apply", bpeApplyBuilder, classOf[BpeApply].getName),
+    ("graft_topic_route", topicRouteBuilder, classOf[TopicRoute].getName),
+    ("graft_referenced_constant", referencedConstantBuilder,
+      classOf[ReferencedConstant].getName))
 
   /** Register graft functions in an existing session (idempotent). */
   def register(spark: SparkSession): Unit =
@@ -353,6 +376,25 @@ object GraftFunctions {
     register(spark)
     call_function("graft_struct_at", struct,
       org.apache.spark.sql.functions.lit(ordinal))
+  }
+
+  /** Column API for the single-pass route kernel: `output` (one of
+    * [[TopicRoute.outputs]]) of each row's topic, decided by `tables`;
+    * registers lazily. */
+  def topicRoute(spark: SparkSession, output: String, tables: Seq[TopicRoute.Table],
+                 topic: Column, data: Column, ingestedAt: Column,
+                 kafkaTs: Column, jsonStr: Column): Column = {
+    register(spark)
+    call_function("graft_topic_route", org.apache.spark.sql.functions.lit(output),
+      topic, data, ingestedAt, kafkaTs, jsonStr,
+      org.apache.spark.sql.functions.lit(TopicRoute.encode(tables)))
+  }
+
+  /** Column API for a constant that generated code reads through a
+    * reference rather than an inlined literal; registers lazily. */
+  def referencedConstant(spark: SparkSession, constant: Column): Column = {
+    register(spark)
+    call_function("graft_referenced_constant", constant)
   }
 
   /** Column API for the reducing top-k aggregate; registers lazily. */

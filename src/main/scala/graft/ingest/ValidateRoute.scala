@@ -2,8 +2,9 @@ package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
+import graft.functions.{GraftFunctions, TopicRoute}
 import graft.schema.TopicSpec
 
 /** The validate-and-route pipeline — the reference's one Spark job
@@ -45,14 +46,18 @@ object ValidateRoute {
 
   /** P9: timestamp repair — absurd `ingested_at` falls back to the source
     * metadata timestamp, then to wall-clock; `evt_ts` derived from the
-    * repaired value (VJ:73-84). */
+    * repaired value (VJ:73-84). The wall clock is constant per query
+    * (batch) or per micro-batch (streaming) and is read through a
+    * reference of the generated class ([[graft.functions.ReferencedConstant]]):
+    * inlined as a literal, each micro-batch's new time was new generated
+    * source, compiled anew every batch. */
   def ensureTimestamps(df: DataFrame): DataFrame = {
     val validSrc = when(col("ingested_at").cast("double") > epochFloor,
       col("ingested_at").cast("double"))
+    val now = GraftFunctions.referencedConstant(df.sparkSession,
+      unix_timestamp().cast("double"))
     df.withColumn("ingested_at",
-        coalesce(validSrc,
-          unix_timestamp(col("kafka_ts")).cast("double"),
-          unix_timestamp().cast("double")))
+        coalesce(validSrc, unix_timestamp(col("kafka_ts")).cast("double"), now))
       .withColumn("evt_ts", to_timestamp(from_unixtime(col("ingested_at"))))
   }
 
@@ -62,59 +67,54 @@ object ValidateRoute {
     df.withColumn("pk",
       concat_ws("|", pkCols.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
 
-  /** Resolve a dotted field path with EXACT-name matching at every
-    * nested level, descending structs by ORDINAL (`graft_struct_at` /
-    * GetStructField) instead of name: name-based nested resolution is
-    * case-insensitive and throws AMBIGUOUS_REFERENCE_TO_FIELDS the
-    * moment a struct carries fields differing only by letter case (the
-    * reference's `strTimeStamp` vs `strTimestamp` shape, one rename
-    * away from appearing NESTED under `player.lookup_player`,
-    * VJ:442-491). Exact match wins; a unique case-insensitive match is
-    * accepted for non-colliding schemas (ordinary resolution
-    * behavior); ambiguity without an exact spelling fails loudly.
-    * `base` resolves the top-level segment (per-topic: plain `col`;
-    * single-pass: the safe-renamed merged columns). */
+  /** Ordinals of a dotted field path, resolved with EXACT-name matching
+    * at every nested level instead of by name: name-based nested
+    * resolution is case-insensitive and throws
+    * AMBIGUOUS_REFERENCE_TO_FIELDS the moment a struct carries fields
+    * differing only by letter case (the reference's `strTimeStamp` vs
+    * `strTimestamp` shape, one rename away from appearing NESTED under
+    * `player.lookup_player`, VJ:442-491). Exact match wins; a unique
+    * case-insensitive match is accepted for non-colliding schemas
+    * (ordinary resolution behavior); ambiguity without an exact spelling
+    * fails loudly. */
+  private[graft] def ordinalPath(schema: StructType, path: String): Seq[Int] = {
+    def pick(st: StructType, seg: String, what: String): Int = {
+      val exact = st.fieldNames.indexOf(seg)
+      if (exact >= 0) exact
+      else {
+        val ci = st.fieldNames.zipWithIndex.filter(_._1.equalsIgnoreCase(seg))
+        require(ci.length == 1, s"field path '$path': $what '$seg' is " +
+          (if (ci.isEmpty) "unknown"
+           else s"ambiguous (${ci.map(_._1).mkString(", ")}) — use the exact spelling"))
+        ci.head._2
+      }
+    }
+    val segs = path.split("\\.").toList
+    if (segs.isEmpty || segs.head.isEmpty)
+      throw new IllegalArgumentException(s"bad field path '$path'")
+    var dt: DataType = schema
+    segs.zipWithIndex.map { case (seg, i) =>
+      dt match {
+        case st: StructType =>
+          val idx = pick(st, seg, if (i == 0) "top segment" else "segment")
+          dt = st.fields(idx).dataType
+          idx
+        case other => throw new IllegalArgumentException(
+          s"field path '$path': segment '$seg' applied to non-struct ${other.simpleString}")
+      }
+    }
+  }
+
+  /** A dotted field path as a Column: the top segment through `base`,
+    * nested segments by [[ordinalPath]] ordinal (`graft_struct_at` /
+    * GetStructField). */
   private[graft] def nestedCol(spark: org.apache.spark.sql.SparkSession,
                                schema: StructType, base: String => Column,
-                               path: String): Column =
-    path.split("\\.").toList match {
-      case top :: rest if top.nonEmpty =>
-        val topIdx = {
-          val exact = schema.fieldNames.indexOf(top)
-          if (exact >= 0) exact
-          else {
-            val ci = schema.fieldNames.zipWithIndex
-              .filter(_._1.equalsIgnoreCase(top))
-            require(ci.length == 1,
-              s"field path '$path': top segment '$top' is " +
-                (if (ci.isEmpty) "unknown" else s"ambiguous (${ci.map(_._1).mkString(", ")})"))
-            ci.head._2
-          }
-        }
-        var dt = schema.fields(topIdx).dataType
-        rest.foldLeft(base(schema.fieldNames(topIdx))) { (acc, seg) =>
-          dt match {
-            case st: StructType =>
-              val exact = st.fieldNames.indexOf(seg)
-              val idx =
-                if (exact >= 0) exact
-                else {
-                  val ci = st.fieldNames.zipWithIndex
-                    .filter(_._1.equalsIgnoreCase(seg))
-                  require(ci.length == 1,
-                    s"field path '$path': segment '$seg' is " +
-                      (if (ci.isEmpty) "unknown"
-                       else s"ambiguous (${ci.map(_._1).mkString(", ")}) — use the exact spelling"))
-                  ci.head._2
-                }
-              dt = st.fields(idx).dataType
-              graft.functions.GraftFunctions.structAt(spark, acc, idx)
-            case other => throw new IllegalArgumentException(
-              s"field path '$path': segment '$seg' applied to non-struct ${other.simpleString}")
-          }
-        }
-      case _ => throw new IllegalArgumentException(s"bad field path '$path'")
-    }
+                               path: String): Column = {
+    val ords = ordinalPath(schema, path)
+    ords.tail.foldLeft(base(schema.fieldNames(ords.head)))(
+      GraftFunctions.structAt(spark, _, _))
+  }
 
   /** P5+P6: required-fields AND-fold plus the sport filter (null sport ⇒
     * invalid; three topics carry no sport field; `player` reads a nested
@@ -302,15 +302,15 @@ object ValidateRoute {
   }
 
   /** The single-pass form of [[plan]]: ONE merged-schema `from_json`,
-    * with every per-topic decision — pk synthesis, required fold,
-    * sport filter, canonical hash, output serialization — folded into
-    * topic-dispatched CASE chains evaluated per row. Output is
-    * identical to [[plan]]'s (ValidateRouteSpec pins both routes
-    * row-for-row, hashes included), but the validated query reads the
-    * source ONCE and the rejected query twice (its schema-reject and
-    * parse-failure branches split at the parse verdict) instead of 13
-    * and 26 times — at 100 TB/day the difference between 3 and 39
-    * passes over the feed.
+    * with every per-topic decision — pk synthesis, required fold, sport
+    * filter, canonical hash, output serialization — made per row by the
+    * [[graft.functions.TopicRoute]] kernel from per-topic ordinal
+    * tables built here once. Output is identical to [[plan]]'s
+    * (ValidateRouteSpec pins both routes row-for-row, hashes included),
+    * but the validated query reads the source ONCE and the rejected
+    * query twice (its schema-reject and parse-failure branches split at
+    * the parse verdict) instead of 13 and 26 times — at 100 TB/day the
+    * difference between 3 and 39 passes over the feed.
     *
     * Why a merged parse is safe here: the reference's topic fields are
     * disjoint-or-identically-typed (everything a string except the
@@ -324,28 +324,30 @@ object ValidateRoute {
     * under [[plan]] — unreachable for conforming producers, and the
     * stricter verdict is the safer one.
     *
-    * Per-row cost note: the CASE chains are O(|specs|) expression
-    * depth but each row evaluates exactly one guarded branch; the
-    * heavyweight JSON parse is shared, NOT cloned per branch (the
-    * planTopic comment's OOM trap does not apply — there is one
-    * `from_json`, and the flatten projection boundary keeps it
-    * single-instance in the optimized plan). */
+    * Plan shape: the kernel reads the parsed struct by ordinal, so the
+    * fields are never flattened into columns (whose names could collide
+    * by letter case, `strTimeStamp` vs `strTimestamp`), and each route
+    * is under 200 expression nodes (PlanSpec pins it) where the Column
+    * form of the same decisions was ~1,900 — a tree streaming
+    * re-optimized every micro-batch. The wall-clock repair
+    * ([[ensureTimestamps]]) sits between the parse and the kernels and is
+    * nondeterministic, so the optimizer pushes no `is_valid` filter
+    * below it: the kernels read the parsed struct and never clone the
+    * `from_json` call. The parse-verdict filter, pushed below the
+    * projection that defines `data`, still evaluates it a second time. */
   def planSinglePass(raw: DataFrame, specs: Seq[TopicSpec],
                      prefix: String = "soccer",
                      enableDedup: Boolean = false): Routed = {
     require(specs.nonEmpty, "need at least one topic spec")
+    val spark = raw.sparkSession
     val corruptCol = "_graft_corrupt"
     val parseSchema = mergedSchema(specs, corruptCol)
-    val topicNames = specs.map(_.name)
-
-    /** topic-dispatched CASE over the flattened merged columns */
-    def byTopic(f: TopicSpec => Column): Column =
-      specs.tail.foldLeft(
-        when(col("topic_name") === specs.head.name, f(specs.head)))(
-        (acc, s) => acc.when(col("topic_name") === s.name, f(s)))
+    val merged = StructType(parseSchema.fields.dropRight(1)) // minus corrupt
+    val ingestedAt = merged.fieldNames.indexOf("ingested_at")
+    require(ingestedAt >= 0, "the topic schemas declare no ingested_at field")
 
     val base = topicName(raw, prefix)
-      .filter(col("topic_name").isin(topicNames: _*))
+      .filter(col("topic_name").isin(specs.map(_.name): _*))
       .select(
         col("topic_name"),
         from_json(col("value").cast("string"), parseSchema,
@@ -357,51 +359,18 @@ object ValidateRoute {
         col("json_str").isNotNull && col("data").isNotNull &&
           col(s"data.$corruptCol").isNull)
 
-    // Flatten by ORDINAL, not `data.*`: the reference schema set has
-    // field pairs differing only by letter case (`strTimeStamp` on
-    // broadcast vs `strTimestamp` on schedule), and name-based
-    // resolution over the merged row is case-insensitive — any later
-    // reference would throw AMBIGUOUS_REFERENCE. Colliding fields get
-    // positional safe names; everything else keeps its exact name, and
-    // `fcol` routes all downstream references (output structs alias
-    // back to the exact JSON key, so serialization is unaffected).
-    val spark = raw.sparkSession
-    val mergedFields = parseSchema.fields.dropRight(1) // minus corrupt
-    val collides: Set[String] = mergedFields.map(_.name)
-      .groupBy(_.toLowerCase).values.filter(_.length > 1).flatten.toSet
-    val safeName: Map[String, String] = mergedFields.zipWithIndex.map {
-      case (f, i) => f.name -> (if (collides(f.name)) s"__g$i" else f.name)
-    }.toMap
-    // nested segments descend by exact-name ORDINAL (nestedCol), not
-    // `.getField`: a struct with case-colliding inner fields (NOTES_r8
-    // watch 3 — the nested twin of the top-level collisions this ordinal
-    // flatten already handles) would make name-based access ambiguous
-    val mergedStruct = StructType(mergedFields)
-    def fcol(path: String): Column =
-      nestedCol(spark, mergedStruct, top => col(safeName(top)), path)
-    val flat = base.filter(col("parse_ok"))
-      .select(mergedFields.toSeq.zipWithIndex.map { case (f, i) =>
-        graft.functions.GraftFunctions.structAt(spark, col("data"), i)
-          .as(safeName(f.name))
-      } ++ Seq(col("topic_name"), col("kafka_ts"), col("json_str")): _*)
-    // shared repair (P9) — identical expression to the per-topic path
-    // (ingested_at never collides: every topic declares it identically)
-    val timed = ensureTimestamps(flat)
-      .withColumn("pk", byTopic(s => concat_ws("|",
-        s.pk.map(c => coalesce(fcol(c).cast("string"), lit(""))): _*)))
-      .withColumn("is_valid", byTopic { s =>
-        val reqOk = s.required.map(c => fcol(c).isNotNull).reduce(_ && _)
-        val sportOk = s.sportField match {
-          case Some(path) =>
-            when(fcol(path).rlike(s.sportPattern), lit(true)).otherwise(lit(false))
-          case None => lit(true)
-        }
-        reqOk && sportOk
-      })
-      .withColumn("payload_hash", byTopic { s =>
-        val cols = s.schema.fieldNames.filterNot(excludeFromHash).sorted
-        sha2(to_json(struct(cols.toSeq.map(c => fcol(c).as(c)): _*)), 256)
-      })
+    val tables = specs.map(s => routeTable(merged, s))
+    def kernel(output: String): Column = GraftFunctions.topicRoute(spark, output,
+      tables, col("topic_name"), col("data"), col("ingested_at"),
+      col("kafka_ts"), col("json_str"))
+    // shared repair (P9), the same expression as the per-topic path; the
+    // kernels read the repaired ingested_at in place of the parsed one
+    val timed = ensureTimestamps(base.filter(col("parse_ok")).select(
+        col("topic_name"), col("data"), col("kafka_ts"), col("json_str"),
+        GraftFunctions.structAt(spark, col("data"), ingestedAt).as("ingested_at")))
+      .withColumn("pk", kernel("pk"))
+      .withColumn("is_valid", kernel("is_valid"))
+      .withColumn("payload_hash", kernel("payload_hash"))
     // topic_name joins the state key: the per-topic path dedups WITHIN
     // each topic, so a (pk, hash) coincidence across topics must not
     // collapse here either
@@ -409,19 +378,11 @@ object ValidateRoute {
       if (enableDedup) dedup(timed, keys = Seq("topic_name", "pk", "payload_hash"))
       else timed
 
-    /** per-topic output serialization, mirroring envelope()'s column
-      * order exactly: the topic's declared fields (repaired
-      * ingested_at in place), then kafka_ts, json_str */
-    def valueOut(s: TopicSpec): Column = {
-      val fields = s.schema.fieldNames.toSeq.map(c => fcol(c).as(c)) ++
-        Seq(col("kafka_ts"), col("json_str"))
-      to_json(struct(fields: _*))
-    }
     def route(df: DataFrame, dest: String): DataFrame =
       df.select(
         concat(lit(s"$dest.$prefix."), col("topic_name")).as("topic"),
-        col("pk").cast("string").as("key"),
-        byTopic(valueOut).as("value"))
+        col("pk").as("key"),
+        kernel("value").as("value"))
 
     val validated = route(deduped.filter(col("is_valid")), "validated")
     val rejectedSchema = route(deduped.filter(!col("is_valid")), "rejected")
@@ -444,5 +405,21 @@ object ValidateRoute {
 
     Routed(validated,
       rejectedSchema.unionByName(parseBadRejected, allowMissingColumns = true))
+  }
+
+  /** One topic's decisions as [[graft.functions.TopicRoute.Table]]
+    * ordinals into the merged parse struct, resolved as [[nestedCol]]
+    * resolves paths. Declared top-level fields (hash and envelope) are
+    * exact names of the merged struct; the hash takes them sorted by
+    * name minus [[excludeFromHash]], the envelope in declared order. */
+  private def routeTable(merged: StructType, s: TopicSpec): TopicRoute.Table = {
+    def top(c: String): Int = merged.fieldNames.indexOf(c)
+    TopicRoute.Table(s.name,
+      pk = s.pk.map(ordinalPath(merged, _)),
+      required = s.required.map(ordinalPath(merged, _)),
+      sport = s.sportField.map(ordinalPath(merged, _)),
+      sportPattern = s.sportPattern,
+      hash = s.schema.fieldNames.filterNot(excludeFromHash).sorted.map(top).toSeq,
+      value = s.schema.fieldNames.map(top).toSeq)
   }
 }

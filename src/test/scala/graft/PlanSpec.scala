@@ -594,4 +594,58 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("LeftSemi"),
       "the repeated-set probe must stay a semi join:\n" + p)
   }
+
+  test("single-pass route plans stay small: under 200 expression nodes " +
+    "per route, no from_json cloned outside the parse verdict") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-route-shape").toString
+    StreamSoak.buildMessages(spark, sf).limit(50)
+      .write.mode("overwrite").parquet(dir)
+    val routed = graft.ingest.ValidateRoute.planSinglePass(
+      spark.read.parquet(dir), graft.schema.Schemas.specs)
+    Seq("validated" -> routed.validated, "rejected" -> routed.rejected)
+      .foreach { case (route, df) =>
+        val opt = df.queryExecution.optimizedPlan
+        val (nodes, clones) = PlanSpec.routeShape(opt)
+        assert(nodes < 200, s"$route: $nodes expression nodes:\n$opt")
+        assert(clones.isEmpty, s"$route: from_json cloned into\n" +
+          clones.mkString("\n"))
+      }
+  }
+}
+
+object PlanSpec {
+  import org.apache.spark.sql.catalyst.expressions.{And, Expression, IsNotNull, IsNull,
+    JsonToStructs, Not, Or}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+
+  /** Shape of an optimized route plan: the expression nodes of all its
+    * operators, and the operators that carry more than one `from_json`
+    * outside the parse verdict (a Filter conjunct made only of null
+    * tests, as the verdict and its negation are). Every `from_json`
+    * beyond the first in one operator is a second parse of the same
+    * payload per row. */
+  def routeShape(plan: LogicalPlan): (Int, Seq[String]) = {
+    val nodes = plan.collect { case p =>
+      p.expressions.map(_.collect { case e => e }.size).sum }.sum
+    def parses(e: Expression): Int = e.collect { case j: JsonToStructs => j }.size
+    def verdict(e: Expression): Boolean = e match {
+      case _: IsNull | _: IsNotNull => true
+      case And(l, r) => verdict(l) && verdict(r)
+      case Or(l, r) => verdict(l) && verdict(r)
+      case Not(c) => verdict(c)
+      case _ => false
+    }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val clones = plan.collect {
+      case f @ Filter(cond, _)
+          if conjuncts(cond).filterNot(verdict).map(parses).sum > 1 =>
+        f.simpleString(400)
+      case p if !p.isInstanceOf[Filter] && p.expressions.map(parses).sum > 1 =>
+        p.simpleString(400)
+    }
+    (nodes, clones)
+  }
 }
