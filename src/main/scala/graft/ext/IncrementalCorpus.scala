@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.warehouse.Commit
+
 /** Transform-on-INGEST corpus curation — the incremental variant of
   * [[CorpusPipeline]]: an appended document batch flows
   * curate → decontaminate → near-dup-dedup-against-index and its
@@ -24,7 +26,9 @@ import org.apache.spark.sql.functions._
   *
   * Durability follows [[graft.stream.IncrementalMv]]'s ledger: each
   * batch writes its survivors (and their index rows) into its OWN
-  * `ingest_batch=<b>` directory and commits a marker file LAST.
+  * `ingest_batch=<b>` directory and commits a marker file LAST (a
+  * [[Commit.Ledger]]; the landings between the writes are the
+  * `IncrementalCorpus.*` points of [[Commit.FaultPoints]]).
   * Readers and the dedup index see only marker-committed batches, so
   * a crash at any landing leaves the state consistent and a replay of
   * the same `batchId` recomputes from exactly the committed prefix —
@@ -71,26 +75,21 @@ object IncrementalCorpus {
     portableDedup: Boolean = false,
     broadcastDedup: Boolean = true)
 
-  private def commitsDir(root: String) =
-    new Path(s"${root.stripSuffix("/")}/_graft_commits")
-  private def commitPath(root: String, batchId: Long) =
-    new Path(commitsDir(root), batchId.toString)
+  /** The three marker ledgers: ingest batches, evictions, compactions
+    * (whose markers carry the fold manifest). */
+  private def ledger(spark: SparkSession, root: String, name: String) =
+    Commit.Ledger(new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(s"${root.stripSuffix("/")}/$name"))
+  private def batches(spark: SparkSession, root: String) =
+    ledger(spark, root, "_graft_commits")
+  private def evictions(spark: SparkSession, root: String) =
+    ledger(spark, root, "_graft_evict_commits")
+  private def compactions(spark: SparkSession, root: String) =
+    ledger(spark, root, "_graft_compact_commits")
   private def docsDir(root: String) = s"${root.stripSuffix("/")}/docs"
   private def indexDir(root: String) = s"${root.stripSuffix("/")}/index"
   private def bandsDir(root: String) = s"${root.stripSuffix("/")}/bands"
   private def batchDir(base: String, b: Long) = s"$base/ingest_batch=$b"
-
-  /** Test-only fault injection (the [[graft.stream.IncrementalMv]]
-    * convention): `"post-docs"` fires after the survivors' parquet
-    * landed but before the index rows, `"post-index"` after the index
-    * write but before the band table, `"post-bands"` after every data
-    * write but before the commit marker — the landings the marker
-    * ledger defends. [[compact]] adds `"post-gen"` (generation written,
-    * marker not yet committed) and `"post-compact-marker"` (marker
-    * committed, folded dirs not yet retired). Default no-op. */
-  private[graft] val faultHook =
-    new java.util.concurrent.atomic.AtomicReference[String => Unit](_ => ())
-  private def fault(point: String): Unit = faultHook.get()(point)
 
   /** Marker-committed eviction ids under `root`, ascending — read-only
     * ledger introspection (markers are permanent, so this includes
@@ -98,51 +97,24 @@ object IncrementalCorpus {
     * Lets a builder that MUTATES a root decide replay-safely whether
     * its eviction step already ran. */
   def committedEvictionIds(spark: SparkSession, root: String): Seq[Long] =
-    committedEvictions(spark, root)
-
-  /** Marker-committed batch ids under `root`, ascending. */
-  private def committedBatches(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(commitsDir(root))) Seq.empty
-    else fs.listStatus(commitsDir(root))
-      .map(_.getPath.getName.toLong).sorted.toSeq
-  }
+    evictions(spark, root).ids
 
   private def evictDir(root: String) = s"${root.stripSuffix("/")}/evicted"
-  private def evictCommitsDir(root: String) =
-    new Path(s"${root.stripSuffix("/")}/_graft_evict_commits")
   private def genDir(root: String, c: Long) =
     s"${root.stripSuffix("/")}/gen/compact=$c"
-  private def compactCommitsDir(root: String) =
-    new Path(s"${root.stripSuffix("/")}/_graft_compact_commits")
 
   /** A compaction's fold manifest — what its generation superseded:
     * the batch ids whose data dirs it folded, the eviction ids whose
     * tombstones it applied, and the prior generations it replaced. The
-    * manifest IS the compact marker's content (rename-committed, so a
+    * manifest IS the compact marker's content (claimed atomically, so a
     * reader can never observe a partial manifest). */
   private final case class CompactManifest(
     batches: Set[Long], evicts: Set[Long], gens: Set[Long])
 
-  private def committedCompactions(spark: SparkSession,
-                                   root: String): Seq[Long] = {
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(compactCommitsDir(root))) Seq.empty
-    else fs.listStatus(compactCommitsDir(root))
-      .map(_.getPath.getName).filterNot(_.startsWith("."))
-      .map(_.toLong).sorted.toSeq
-  }
-
   private def readManifest(spark: SparkSession, root: String,
                            c: Long): CompactManifest = {
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new Path(compactCommitsDir(root), c.toString))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val rows = text.linesIterator.filter(_.contains(":")).toSeq
+    val rows = compactions(spark, root).read(c).linesIterator
+      .filter(_.contains(":")).toSeq
       .map { l => val Array(k, v) = l.split(":", 2); (k, v.toLong) }
     CompactManifest(
       rows.collect { case ("batch", b) => b }.toSet,
@@ -154,15 +126,8 @@ object IncrementalCorpus {
     * its manifest folded), or None for a never-compacted root. */
   private def latestCompaction(spark: SparkSession,
                                root: String): Option[(Long, CompactManifest)] =
-    committedCompactions(spark, root).lastOption
+    compactions(spark, root).ids.lastOption
       .map(c => (c, readManifest(spark, root, c)))
-  private def committedEvictions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(evictCommitsDir(root))) Seq.empty
-    else fs.listStatus(evictCommitsDir(root))
-      .map(_.getPath.getName.toLong).sorted.toSeq
-  }
 
   /** Committed eviction tombstones — CANONICAL columns `(id,
     * ingest_batch)` regardless of the caller's `idCol` ([[evict]]
@@ -173,11 +138,9 @@ object IncrementalCorpus {
     * ever committed. */
   private def evictedIds(spark: SparkSession,
                          root: String): Option[DataFrame] = {
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = committedEvictions(spark, root)
-      .map(e => s"${evictDir(root)}/evict=$e")
-      .filter(d => fs.exists(new Path(d)))
+    val ledger = evictions(spark, root)
+    val dirs = ledger.ids.map(e => s"${evictDir(root)}/evict=$e")
+      .filter(d => ledger.fs.exists(new Path(d)))
     if (dirs.isEmpty) None
     else {
       // fail with the remedy, not an unresolved-column error: id-only
@@ -229,7 +192,7 @@ object IncrementalCorpus {
   private def readFamily(spark: SparkSession, root: String,
                          family: String): Option[DataFrame] = {
     val base = s"${root.stripSuffix("/")}/$family"
-    val committed = committedBatches(spark, root)
+    val committed = batches(spark, root).ids
     def batchRead(bs: Seq[Long]) = spark.read.option("basePath", base)
       .parquet(bs.map(b => batchDir(base, b)): _*)
       .withColumn("ingest_batch", col("ingest_batch").cast("long"))
@@ -341,16 +304,15 @@ object IncrementalCorpus {
     require(ids.columns.contains("ingest_batch"),
       "evict: tombstones key by (id, ingest_batch) — pass " +
         "retroContamination's output (or any frame carrying both columns)")
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(evictCommitsDir(root), evictId.toString)
-    if (fs.exists(marker)) return
+    val ledger = evictions(spark, root)
+    if (ledger.has(evictId)) return
     ids.select(col(cfg.idCol).as("id"),
         col("ingest_batch").cast("long").as("ingest_batch"))
       .distinct()
       .write.mode("overwrite")
       .parquet(s"${evictDir(root)}/evict=$evictId")
-    fs.create(marker, true).close()
+    Commit.fault("IncrementalCorpus.post-evict")
+    ledger.mark(evictId)
   }
 
   /** Compaction: fold the root's committed state — every batch dir,
@@ -368,7 +330,7 @@ object IncrementalCorpus {
     * LEDGER: batch and eviction MARKERS are permanent — a replayed
     * `applyDelta`/`evict` still short-circuits after its data was
     * folded (readers skip tombstone markers whose data dir is gone).
-    * The compact marker itself is rename-committed and CONTAINS the
+    * The compact marker itself is claimed atomically and CONTAINS the
     * fold manifest (folded batches / evictions / prior generations),
     * so a reader can never observe a half-written manifest. Readers
     * switch atomically at the marker: before it they read batch dirs +
@@ -401,18 +363,17 @@ object IncrementalCorpus {
     * writing. */
   def compact(spark: SparkSession, root: String, cfg: Config,
               compactId: Long, mergeBatches: Boolean = false): Unit = {
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(compactCommitsDir(root), compactId.toString)
-    if (!fs.exists(marker)) {
-      val committed = committedBatches(spark, root)
+    val ledger = compactions(spark, root)
+    val fs = ledger.fs
+    if (!ledger.has(compactId)) {
+      val committed = batches(spark, root).ids
       require(committed.nonEmpty,
         s"IncrementalCorpus.compact: no committed batches under $root")
-      val prevGens = committedCompactions(spark, root)
+      val prevGens = ledger.ids
       require(prevGens.forall(_ < compactId),
         s"IncrementalCorpus.compact: compactId $compactId must exceed " +
           s"every committed compaction (${prevGens.mkString(",")})")
-      val evs = committedEvictions(spark, root)
+      val evs = evictions(spark, root).ids
       // nothing worth folding → free no-op (the common ingest-only life)
       if (evs.isEmpty && prevGens.isEmpty && committed.size <= 1) return
       def writeGen(df: DataFrame, path: String): Unit = {
@@ -467,29 +428,24 @@ object IncrementalCorpus {
           .select(col("band"), col("bh"), col("id"), col("ingest_batch")),
           s"${genDir(root, compactId)}/bands")
       }
-      fault("post-gen")
-      // rename-commit the manifest: partial marker content is unreadable
+      Commit.fault("IncrementalCorpus.post-gen")
       val manifest = (committed.map(b => s"batch:$b") ++
         evs.map(e => s"evict:$e") ++ prevGens.map(g => s"gen:$g"))
         .mkString("", "\n", "\n")
-      val tmp = new Path(compactCommitsDir(root), s".tmp-$compactId")
-      val out = fs.create(tmp, true)
-      try out.write(manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      require(fs.rename(tmp, marker),
-        s"IncrementalCorpus.compact: marker rename failed for $compactId")
+      require(ledger.claim(compactId, manifest),
+        s"IncrementalCorpus.compact: marker $compactId already claimed")
     }
-    fault("post-compact-marker")
+    Commit.fault("IncrementalCorpus.post-compact-marker")
     // retirement — idempotent, re-run on every replay so a crash
     // mid-GC can never orphan folded dirs behind the marker
     val m = readManifest(spark, root, compactId)
     m.batches.foreach { b =>
       Seq(docsDir(root), indexDir(root), bandsDir(root))
-        .foreach(base => fs.delete(new Path(batchDir(base, b)), true))
+        .foreach(base => Commit.delete(fs, new Path(batchDir(base, b))))
     }
     m.evicts.foreach(e =>
-      fs.delete(new Path(s"${evictDir(root)}/evict=$e"), true))
-    m.gens.foreach(g => fs.delete(new Path(genDir(root, g)), true))
+      Commit.delete(fs, new Path(s"${evictDir(root)}/evict=$e")))
+    m.gens.foreach(g => Commit.delete(fs, new Path(genDir(root, g))))
   }
 
   /** Curate one batch against the frozen vocabulary —
@@ -565,10 +521,8 @@ object IncrementalCorpus {
     graft.Guards.reserved(delta, "IncrementalCorpus.applyDelta",
       Seq("quality", "lang_guess", "dup_ngram_frac", "oov_rate",
         "ingest_batch"))
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = commitPath(root, batchId)
-    if (fs.exists(marker)) return // replayed batch: already committed
+    val ledger = batches(spark, root)
+    if (ledger.has(batchId)) return // replayed batch: already committed
 
     // per-doc stages — delta-sized, broadcast state only
     val curated = curate(delta, cfg, vocab)
@@ -582,7 +536,7 @@ object IncrementalCorpus {
     val kept =
       if (cfg.portableDedup)
         portableDedupAgainstAccepted(clean, cfg,
-          if (committedBatches(spark, root).isEmpty) clean.limit(0)
+          if (ledger.ids.isEmpty) clean.limit(0)
           else readAccepted(spark, root),
           stagingPath = Some(s"$staging/psig"))
       // the default kernel path probes the persisted band table with
@@ -611,25 +565,25 @@ object IncrementalCorpus {
     // missing index dirs).
     val docsPath = batchDir(docsDir(root), batchId)
     kept.write.mode("overwrite").parquet(docsPath)
-    fault("post-docs")
+    Commit.fault("IncrementalCorpus.post-docs")
     if (!cfg.portableDedup) {
       val idxPath = batchDir(indexDir(root), batchId)
       TextDedup.minhashIndex(spark.read.parquet(docsPath), cfg.textCol,
           cfg.idCol, cfg.shingleK, cfg.numHashes)
         .write.mode("overwrite").parquet(idxPath)
-      fault("post-index")
+      Commit.fault("IncrementalCorpus.post-index")
       // the thin band table, derived FROM THE LANDED INDEX (same
       // truncated-lineage discipline as the index-from-landed-docs
       // write above) — the broadcast-probe side of later batches
       TextDedup.bandRows(spark.read.parquet(idxPath),
           cfg.numHashes, cfg.bands)
         .write.mode("overwrite").parquet(batchDir(bandsDir(root), batchId))
-    } else fault("post-index")
-    fault("post-bands")
+    } else Commit.fault("IncrementalCorpus.post-index")
+    Commit.fault("IncrementalCorpus.post-bands")
     // staging is a pure recompute cache — drop it BEFORE the marker (a
     // crash between marker and a trailing delete would orphan the dir
     // forever, since replays short-circuit at the marker)
-    fs.delete(new Path(staging), true)
-    fs.create(marker, true).close()
+    Commit.delete(ledger.fs, new Path(staging))
+    ledger.mark(batchId)
   }
 }

@@ -39,9 +39,10 @@ object IvfIndex {
     * corpus size (classical IVF practice). Assignment then touches every
     * row exactly ONCE (a narrow transform), so the full build is one
     * bounded fit + one full pass. Inputs at or under the bound fit on
-    * everything — small/fixture corpora are bit-identical to the
-    * pre-sampling behavior. `fitRows` records how many rows the
-    * quantizer saw. */
+    * every row. Fits of at most `localFitRows` rows take the driver-side
+    * Lloyd path below, whose centroids differ from an MLlib fit of the
+    * same rows (both valid); `localFitRows = 0` keeps the MLlib fit.
+    * `fitRows` records how many rows the quantizer saw. */
   def fit(df: DataFrame, embCol: String, idCol: String, k: Int,
           seed: Long = 42L, maxFitRows: Long = 1000000L,
           localFitRows: Long = 262144L): Model = {

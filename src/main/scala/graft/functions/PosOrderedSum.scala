@@ -27,9 +27,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * and `lp` accumulates into a double left-to-right starting at 0.0.
   * An empty array sums to 0.0.
   *
-  * Null contract: a null array ⇒ null; a null element or null field ⇒
-  * null (the HOF sorts nulls last and `acc + null` poisons the fold —
-  * same observable result, pinned in the spec).
+  * Null contract: a null array ⇒ null; a null element or a null `lp`
+  * ⇒ null (the HOF sorts nulls last and `acc + null` poisons the fold
+  * — same observable result, pinned in the spec). A null `pos` is out
+  * of contract (callers produce `pos` with `posexplode`): the kernel
+  * returns null there, while the HOF, which reads only `lp`, would
+  * return the sum.
   */
 case class PosOrderedSum(child: Expression) extends UnaryExpression {
 

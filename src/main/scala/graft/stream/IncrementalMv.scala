@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.warehouse.Commit
+
 /** A mergeable aggregate the MV maintenance loop can keep incrementally
   * fresh: `delta` turns raw micro-batch rows into one per-group STATE
   * value (an aggregate Column), `merge` folds states (existing ∪ delta
@@ -165,7 +167,7 @@ object MvAgg {
   * stream — the reference keeps its per-day rollups as engine-side
   * materialized views; this is the Spark-native maintenance loop:
   * `foreachBatch` merges each micro-batch's delta into ONLY the day
-  * partitions that batch touched, via dynamic partition overwrite.
+  * partitions that batch touched, by moving staged day directories in.
   * Parameterized over any [[MvAgg]] (count/sum/min/max natively, KLL
   * and other mergeable sketch states through their binary form), so a
   * ClickHouse-MV-style ingest rollup can maintain any mergeable
@@ -174,9 +176,9 @@ object MvAgg {
   * Correctness under failure: `foreachBatch` is at-least-once — after a
   * crash the last batch replays. A replayed merge would double-count, so
   * each applied batch writes a commit marker
-  * (`<mv>/_graft_commits/<batchId>`) and a replay with an existing
-  * marker is skipped — exactly-once EFFECT on top of at-least-once
-  * delivery, the same ledger trick as any idempotent sink.
+  * (`<mv>/_graft_commits/<batchId>`, a [[Commit.Ledger]]) and a replay
+  * with an existing marker is skipped — exactly-once EFFECT on top of
+  * at-least-once delivery, the same ledger trick as any idempotent sink.
   *
   * Scale shape: the delta aggregate is one shuffle of the micro-batch
   * (small); the read-back touches only the affected day partitions
@@ -185,33 +187,6 @@ object MvAgg {
   * — which is the point of maintaining the MV incrementally.
   */
 object IncrementalMv {
-
-  private def commitsDir(mvPath: String) =
-    new Path(s"${mvPath.stripSuffix("/")}/_graft_commits")
-
-  private def commitPath(mvPath: String, batchId: Long) =
-    new Path(commitsDir(mvPath), batchId.toString)
-
-  private def stagingPath(mvPath: String, batchId: Long) =
-    new Path(s"${mvPath.stripSuffix("/")}/_graft_staging/$batchId")
-
-  /** Test-only fault injection for [[applyAggDelta]]'s crash-landing
-    * matrix: the loop calls this at the three landings the
-    * staging/marker ledger defends — `"pre-stage"` (delta computed,
-    * staging snapshot not yet `_SUCCESS`-complete → a replay must
-    * RECOMPUTE the merge), `"post-stage"` (staging `_SUCCESS` written,
-    * MV not yet installed → a replay must SKIP the merge and install
-    * off the staged snapshot; re-merging from a half-installed MV
-    * would double-count), `"post-install"` (partitions installed,
-    * batch marker not yet written → a replay re-installs the same
-    * snapshot idempotently and commits). Default is a no-op;
-    * MaintenanceSpec arms a fail-once hook per landing so every
-    * replay path is exercised DETERMINISTICALLY each run — the
-    * undrained-stop streaming test keeps the probabilistic
-    * integration coverage on top. */
-  private[graft] val faultHook =
-    new java.util.concurrent.atomic.AtomicReference[String => Unit](_ => ())
-  private def fault(point: String): Unit = faultHook.get()(point)
 
   /** Merge one micro-batch of raw events into the MV (schema: day DATE
     * partition, key STRING, state — the [[MvAgg]]'s state type).
@@ -231,6 +206,11 @@ object IncrementalMv {
     *  3. COMMIT: write the batch marker, prune older markers (only the
     *     latest batch can ever replay — the streaming checkpoint is the
     *     source of truth for progress), drop the staging dir.
+    *
+    * The landings between the steps are the fault points
+    * `IncrementalMv.pre-stage` (delta computed, staging incomplete),
+    * `.post-stage` (staging complete, MV not installed) and
+    * `.post-install` (installed, no marker) of [[Commit.FaultPoints]].
     *
     * PRECONDITION — deterministic `batch`: the touched-day set is
     * derived from a second scan of `batch` (column-pruned to `tsCol`)
@@ -254,12 +234,12 @@ object IncrementalMv {
     graft.functions.GraftFunctions.register(spark)
     val fs = new Path(mvPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = commitPath(mvPath, batchId)
-    if (fs.exists(marker)) return // replayed batch: already applied
-    val staged = stagingPath(mvPath, batchId)
-    val stagedOk = new Path(staged, "_SUCCESS")
+    val root = mvPath.stripSuffix("/")
+    val ledger = Commit.Ledger(fs, new Path(s"$root/_graft_commits"))
+    if (ledger.has(batchId)) return // replayed batch: already applied
+    val staged = new Path(s"$root/_graft_staging/$batchId")
 
-    if (!fs.exists(stagedOk)) {
+    if (!Commit.complete(fs, staged)) {
       // phase 1 — merge into staging (MV untouched). The delta
       // aggregate is computed inside the staged write itself, not
       // persisted for a separate job over the full-width batch; the
@@ -282,11 +262,11 @@ object IncrementalMv {
           // can't mint or drop a day)
           val touched = batch.select(to_date(col(tsCol)).as("day"))
             .distinct().collect().map(_.getDate(0))
-          if (touched.isEmpty) { fs.create(marker, true).close(); return }
+          if (touched.isEmpty) { ledger.mark(batchId); return }
           spark.read.parquet(mvPath)
             .filter(col("day").isin(touched.map(d => lit(d)): _*))
         } else delta.limit(0)
-      fault("pre-stage")
+      Commit.fault("IncrementalMv.pre-stage")
       // repartition by day BEFORE the merge aggregate: hash(day) is a
       // valid clustering for groupBy(day, key) (a subset of the group
       // keys), so the merge runs on that one exchange AND each staged
@@ -303,7 +283,7 @@ object IncrementalMv {
         .agg(agg.merge(col(stateCol)).as(stateCol))
         .write.mode("overwrite").partitionBy("day").parquet(staged.toString)
     }
-    fault("post-stage")
+    Commit.fault("IncrementalMv.post-stage")
 
     // phase 2 — install the staged snapshot (idempotent re-run): for
     // each staged day partition, drop the MV's version of that day and
@@ -322,31 +302,22 @@ object IncrementalMv {
     fs.listStatus(staged)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("day="))
       .foreach { st =>
+        // checked: a silent false would lose the day's data permanently
+        // once phase 3 prunes staging; failing before the marker commits
+        // keeps the batch replayable
         val target = new Path(mvPath, st.getPath.getName)
-        // Check both metadata ops' boolean results: HDFS-style APIs
-        // report failure by returning false, not by throwing, and a
-        // silent false here would lose the day's data permanently once
-        // phase 3 prunes staging (the Spark write job this install
-        // replaced would have thrown). Failing before the marker
-        // commits keeps the batch replayable.
-        if (fs.exists(target))
-          require(fs.delete(target, true),
-            s"MV install: could not delete stale $target")
-        require(fs.rename(st.getPath, target),
-          s"MV install: rename failed: ${st.getPath} -> $target")
+        Commit.delete(fs, target)
+        Commit.move(fs, st.getPath, target)
       }
 
     // phase 3 — commit + prune (ledger stays O(1), not one file/batch)
-    fault("post-install")
-    fs.create(marker, true).close()
-    if (fs.exists(commitsDir(mvPath)))
-      fs.listStatus(commitsDir(mvPath))
-        .filter(_.getPath.getName != batchId.toString)
-        .foreach(s => fs.delete(s.getPath, false))
+    Commit.fault("IncrementalMv.post-install")
+    ledger.mark(batchId)
+    ledger.pruneExcept(batchId)
     // the whole staging root is stale once this batch committed (only
     // the latest batch can replay) — drop it, including any leftovers
     // from a batch that crashed after its marker
-    fs.delete(staged.getParent, true)
+    Commit.delete(fs, staged.getParent)
   }
 
   /** The original daily-count MV (schema: day, key, n) — now the

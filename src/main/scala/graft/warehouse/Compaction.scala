@@ -20,7 +20,9 @@ import org.apache.spark.sql.SparkSession
   * here would flatten the partitioning and delete sidecar dirs; compact
   * each partition directory individually instead.
   *
-  * The rewrite goes to a sibling temp dir, then swaps in two FS renames.
+  * The rewrite goes to a sibling temp dir, then swaps in two checked
+  * moves ([[Commit.move]]; the fault point `Compaction.mid-swap` sits
+  * between them).
   * This is an OFFLINE maintenance operation: between the renames the
   * path briefly does not exist, and a reader planning in that window
   * fails (and one that listed before the swap reads deleted files).
@@ -65,13 +67,11 @@ object Compaction {
     val tmp = dir.stripSuffix("/") + ".graft-compact-tmp"
     out.write.mode("overwrite").parquet(tmp)
 
-    val p = new Path(dir)
-    val t = new Path(tmp)
     val old = new Path(dir.stripSuffix("/") + ".graft-compact-old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.rename(p, old), s"compaction swap failed renaming $p aside")
-    require(fs.rename(t, p), s"compaction swap failed installing $t")
-    fs.delete(old, true)
+    Commit.move(rootFs, root, old)
+    Commit.fault("Compaction.mid-swap")
+    Commit.move(rootFs, new Path(tmp), root)
+    Commit.delete(rootFs, old)
     n
   }
 }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    not fingerprintable) also bypasses, conservatively.
   *
   * Concurrency: results write to a `.tmp-<uuid>` dir and publish by
-  * rename; losing a publish race just means reading the winner's
+  * [[Commit.move]]; losing a publish race just means reading the winner's
   * identical bytes. At 100 TB the cache holds query RESULTS (usually
   * KB–MB aggregates), not inputs — the win is skipping the scan, and
   * the key check is metadata-only (one file listing, no data read).
@@ -50,25 +50,18 @@ object ResultCache {
       case Some(k) =>
         val dir = new Path(cacheDir, k)
         val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(new Path(dir, "_SUCCESS")))
+        if (Commit.complete(fs, dir))
           Cached(spark.read.parquet(dir.toString), hit = true, Some(k))
         else {
           val tmp = new Path(cacheDir, s".tmp-${java.util.UUID.randomUUID()}")
-          df.write.mode("overwrite").parquet(tmp.toString)
-          // publish by rename; a lost race leaves the winner's
-          // identical entry in place — drop ours and read theirs.
-          // Local-FS hazard: RawLocalFileSystem.rename onto an EXISTING
-          // dir falls back to FileUtil.copy, which copies our tmp dir
-          // INSIDE the winner's entry and still returns true — so (a)
-          // re-check existence right before renaming, and (b) after a
-          // "successful" rename, delete any nested `.tmp-*` leak (the
-          // dot prefix hides it from parquet reads, but it would sit
-          // there until the whole entry ages out otherwise).
-          if (fs.exists(dir) || !fs.rename(tmp, dir)) fs.delete(tmp, true)
-          else {
-            val nested = new Path(dir, tmp.getName)
-            if (fs.exists(nested)) fs.delete(nested, true)
-          }
+          // publish by move; a lost race leaves the winner's identical
+          // entry in place — drop ours (the cleanup) and read theirs
+          Commit.withCleanup {
+            df.write.mode("overwrite").parquet(tmp.toString)
+            Commit.fault("ResultCache.pre-publish")
+            try Commit.move(fs, tmp, dir)
+            catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => }
+          }(Commit.delete(fs, tmp))
           Cached(spark.read.parquet(dir.toString), hit = false, Some(k))
         }
     }

@@ -28,17 +28,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * A reader of version N opens manifest N and scans exactly the listed
   * directories. A commit writes its data directory FIRST, then publishes
-  * a new manifest via write-temp + an atomic claim of the version file
-  * (HDFS: rename, which fails server-side on an existing destination;
-  * local FS: POSIX hard link, which fails EEXIST — Hadoop's local
-  * rename is check-then-rename and NOT atomic under contention; see
-  * `commitRename`). The claim is the commit point. A crash before it
+  * a new manifest with an atomic claim of the version file
+  * ([[Commit.claim]]). The claim is the commit point. A crash before it
   * leaves an orphan data dir that no manifest references — invisible to
   * every reader, reclaimable by `vacuum`. Concurrent committers race on
   * the claim; the loser re-reads the log and retries on top of the
   * winner — optimistic concurrency, identical in spirit to Delta's
-  * log-entry race. (On S3, neither primitive is atomic: front this with
-  * a conditional-PUT or a catalog as every table format does there.)
+  * log-entry race.
   *
   * Scale: metadata is O(commits) driver-side KBs (like a Delta JSON
   * log); appends never rewrite data; time travel costs one manifest
@@ -93,13 +89,8 @@ object Snapshots {
     else None
 
   /** Latest committed version, or 0 if the table has no commits. */
-  def latestVersion(spark: SparkSession, dir: String): Int = {
-    val log = new Path(dir, LogDir)
-    val f = fs(spark, dir)
-    if (!f.exists(log)) 0
-    else f.listStatus(log).iterator
-      .flatMap(s => versionOf(s.getPath.getName)).foldLeft(0)(math.max)
-  }
+  def latestVersion(spark: SparkSession, dir: String): Int =
+    versions(spark, dir).lastOption.getOrElse(0)
 
   /** All committed versions, ascending. */
   def versions(spark: SparkSession, dir: String): Seq[Int] = {
@@ -162,33 +153,32 @@ object Snapshots {
     * on top of `base`. Returns the committed version. Retries past
     * concurrent committers by re-reading the log, re-deriving the
     * manifest with `rebase` (applied to the winner's RAW lines, so
-    * metadata records survive the rebase), and renaming again.
+    * metadata records survive the rebase), and claiming again.
     * (`private[graft]` so the race/retry path is testable directly.) */
   private[graft] def publish(spark: SparkSession, dir: String, base: Int,
                       lines: Seq[String],
                       rebase: Seq[String] => Seq[String]): Int = {
+    Commit.fault("Snapshots.post-data")
     val f = fs(spark, dir)
     f.mkdirs(new Path(dir, LogDir))
     var attemptBase = base
     var attemptLines = lines
     var attempt = 0
     while (attempt < MaxCommitRetries) {
-      val tmp = new Path(dir, s"$LogDir/.tmp-${UUID.randomUUID()}")
-      val out = f.create(tmp, false)
-      try out.write(
-        (attemptLines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-      finally out.close()
       val target = manifestPath(dir, attemptBase + 1)
-      if (commitRename(f, tmp, target)) { f.delete(tmp, false); return attemptBase + 1 }
-      f.delete(tmp, false)
+      if (Commit.claim(f, target,
+          (attemptLines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))) {
+        Commit.fault("Snapshots.post-claim")
+        return attemptBase + 1
+      }
       val tip = latestVersion(spark, dir)
       if (tip == attemptBase)
         // The target doesn't exist (no competing commit advanced the
-        // log), yet the rename failed — a filesystem fault, not a race.
+        // log), yet the claim failed — a filesystem fault, not a race.
         // Retrying or calling manifestLines(tip) here would fail
         // confusingly (worst case "no version 0" on a first commit);
         // report the real condition instead.
-        sys.error(s"commit to $dir failed: rename to $target returned " +
+        sys.error(s"commit to $dir failed: claim of $target returned " +
           "false with no competing commit (filesystem error?)")
       // Lost the race: someone committed attemptBase+1 first. Rebase on
       // the new tip and try again.
@@ -199,31 +189,6 @@ object Snapshots {
     sys.error(s"commit to $dir lost $MaxCommitRetries manifest races; " +
       "giving up (pathological contention — serialize your writers)")
   }
-
-  /** Atomically claim `target` with `tmp`'s content; false if another
-    * committer claimed it first. On HDFS/ABFS the plain rename IS the
-    * atomic claim (server-side, fails on existing destination). On the
-    * LOCAL filesystem Hadoop's rename is check-then-rename(2) — a
-    * TOCTOU hole where two concurrent renames to the same absent
-    * target BOTH return true and one manifest silently vanishes (found
-    * by the 8-way concurrent-append stress spec) — so local commits
-    * claim via POSIX hard link instead, which the kernel rejects with
-    * EEXIST atomically. The link also sidesteps the `.crc` sidecar
-    * lag (no sidecar is created for the target; Hadoop reads happily
-    * without one). On S3, NEITHER primitive is atomic — front the log
-    * with a conditional PUT or a catalog, as every table format does. */
-  private def commitRename(f: FileSystem, tmp: Path, target: Path): Boolean =
-    if (f.getScheme == "file") {
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(target.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: UnsupportedOperationException => f.rename(tmp, target)
-      }
-    } else f.rename(tmp, target)
 
   /** Fresh name for an UNTAGGED data dir. The `c-x` prefix ('x' is not
     * a hex digit) keeps the random suffix out of [[BatchTagRe]]'s
@@ -324,8 +289,7 @@ object Snapshots {
   def compact(spark: SparkSession, dir: String,
               targetPartitions: Int = 0,
               zorderCols: Seq[String] = Nil, zorderBits: Int = 16): Int = {
-    val base = latestVersion(spark, dir)
-    require(base > 0, s"table at $dir has no commits")
+    val base = resolve(spark, dir, None)
     val lines = manifestLines(spark, dir, base)
     val dirs = lines.filterNot(isMeta)
     if (dirs.size < 2) return base
@@ -388,32 +352,13 @@ object Snapshots {
     * silently losing the delete — see [[swapStrict]]. */
   def deleteWhere(spark: SparkSession, dir: String,
                   predicate: org.apache.spark.sql.Column): Int = {
-    val base = latestVersion(spark, dir)
-    require(base > 0, s"table at $dir has no commits")
+    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
+    val base = resolve(spark, dir, None)
     val lines = manifestLines(spark, dir, base)
-    val live = lines.filterNot(isMeta)
-    // ONE probe job over all live dirs (not a driver loop of per-dir
-    // jobs — 10k commits must not mean 10k sequential jobs): scan with
-    // the predicate pushed down, collect only the DISTINCT matching
-    // file names, attribute files to dirs by path prefix.
-    import org.apache.spark.sql.functions.input_file_name
-    val liveAbs = live.map(d => d -> new Path(dir, d))
-    val matchPaths = spark.read.parquet(liveAbs.map(_._2.toString): _*)
-      .filter(predicate).select(input_file_name()).distinct()
-      .collect().map(r => new Path(r.getString(0)).toUri.getPath)
-    val affected = liveAbs.filter { case (_, abs) =>
-      val prefix = abs.toUri.getPath + "/"
-      matchPaths.exists(_.startsWith(prefix))
-    }.map(_._1)
-    if (affected.isEmpty) return base
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val rewritten = affected.map { d =>
-      val keep = spark.read.parquet(new Path(dir, d).toString)
-        .filter(not(coalesce(predicate, lit(false))))
-      val name = rewrittenName(d)
-      keep.write.mode("errorifexists").parquet(new Path(dir, name).toString)
-      d -> name
-    }.toMap
+    val rewritten = rewriteMatched(spark, dir, lines.filterNot(isMeta))(
+      _.filter(predicate).select(input_file_name()))(
+      _.filter(not(coalesce(predicate, lit(false)))))
+    if (rewritten.isEmpty) return base
     publish(spark, dir, base, swapStrict(rewritten, lines),
       tipLines => swapStrict(rewritten, tipLines))
   }
@@ -525,41 +470,49 @@ object Snapshots {
   private def upsertImpl(spark: SparkSession, dir: String, source: DataFrame,
                          keyCols: Seq[String], batchRecord: Option[Long],
                          checkDuplicates: Boolean = true): Int = {
+    import org.apache.spark.sql.functions.{col, input_file_name}
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val base = latestVersion(spark, dir)
-    require(base > 0, s"table at $dir has no commits")
+    val base = resolve(spark, dir, None)
     if (checkDuplicates) requireUniqueKeys(source, keyCols)
     val lines = manifestLines(spark, dir, base)
-    val live = lines.filterNot(isMeta)
-    import org.apache.spark.sql.functions.input_file_name
-    val keys = source.select(keyCols.map(org.apache.spark.sql.functions.col): _*)
-      .distinct()
-    val liveAbs = live.map(d => d -> new Path(dir, d))
+    val keys = source.select(keyCols.map(col): _*).distinct()
     // project the file name BEFORE the join: input_file_name() is only
     // defined directly above its scan (a post-join evaluation would be
     // ambiguous across the two sources and Spark rejects it)
-    val matchPaths = spark.read.parquet(liveAbs.map(_._2.toString): _*)
-      .withColumn("__graft_file", input_file_name())
-      .join(keys, keyCols, "left_semi")
-      .select(org.apache.spark.sql.functions.col("__graft_file")).distinct()
-      .collect().map(r => new Path(r.getString(0)).toUri.getPath)
-    val affected = liveAbs.filter { case (_, abs) =>
-      val prefix = abs.toUri.getPath + "/"
-      matchPaths.exists(_.startsWith(prefix))
-    }.map(_._1)
-    val rewritten = affected.map { d =>
-      val keep = spark.read.parquet(new Path(dir, d).toString)
-        .join(keys, keyCols, "left_anti")
-      val name = rewrittenName(d)
-      keep.write.mode("errorifexists").parquet(new Path(dir, name).toString)
-      d -> name
-    }.toMap
+    val rewritten = rewriteMatched(spark, dir, lines.filterNot(isMeta))(
+      _.withColumn("__graft_file", input_file_name())
+        .join(keys, keyCols, "left_semi").select(col("__graft_file")))(
+      _.join(keys, keyCols, "left_anti"))
     val newDir = writeCommitDir(spark, dir, source)
     def finish(ls: Seq[String]): Seq[String] = {
       val swapped = swapStrict(rewritten, ls) :+ newDir
       batchRecord.fold(swapped)(withBatchRecord(swapped, _))
     }
     publish(spark, dir, base, finish(lines), finish)
+  }
+
+  /** Rewrite the live dirs that hold a matching row through `keep`;
+    * returns each rewritten dir → its replacement. ONE probe job over
+    * all live dirs (not a driver loop of per-dir jobs — 10k commits must
+    * not mean 10k sequential jobs): `matchFiles` maps the scan of the
+    * live dirs to the file names of matching rows, only their DISTINCT
+    * values are collected, and files are attributed to dirs by path
+    * prefix. */
+  private def rewriteMatched(spark: SparkSession, dir: String,
+                             live: Seq[String])(matchFiles: DataFrame => DataFrame)(
+      keep: DataFrame => DataFrame): Map[String, String] = {
+    val scan = spark.read.parquet(live.map(d => new Path(dir, d).toString): _*)
+    val files = matchFiles(scan).distinct().collect()
+      .map(r => new Path(r.getString(0)).toUri.getPath)
+    live.filter { d =>
+      val prefix = new Path(dir, d).toUri.getPath + "/"
+      files.exists(_.startsWith(prefix))
+    }.map { d =>
+      val name = rewrittenName(d)
+      keep(spark.read.parquet(new Path(dir, d).toString))
+        .write.mode("errorifexists").parquet(new Path(dir, name).toString)
+      d -> name
+    }.toMap
   }
 
   /** Name for a dir that REPLACES `source` in the manifest. Preserves
@@ -595,11 +548,6 @@ object Snapshots {
     lines.map(d => rewritten.getOrElse(d, d))
   }
 
-  /** Read the table at `version` (default: latest). `mergeSchema`
-    * unions the schemas of all live commit dirs — the schema-evolution
-    * read: commits written before a column existed surface it as NULL.
-    * Off by default because schema merging footer-reads every file up
-    * front; turn it on only for tables that actually evolved. */
   /** Delta-style SHALLOW CLONE: `dstDir` becomes a new table whose
     * version-1 manifest references the SOURCE's live commit dirs by
     * absolute path — no data is copied, the clone is a metadata-only
@@ -621,8 +569,7 @@ object Snapshots {
     * streaming target with its own exactly-once ledger. */
   def shallowClone(spark: SparkSession, srcDir: String, dstDir: String,
                    version: Option[Int] = None): Int = {
-    val v = version.getOrElse(latestVersion(spark, srcDir))
-    require(v > 0, s"table at $srcDir has no commits")
+    val v = resolve(spark, srcDir, version)
     require(latestVersion(spark, dstDir) == 0,
       s"clone target $dstDir already has commits")
     val f = fs(spark, srcDir)
@@ -632,12 +579,16 @@ object Snapshots {
     publish(spark, dstDir, 0, absolute, identity)
   }
 
+  /** Read the table at `version` (default: latest). `mergeSchema`
+    * unions the schemas of all live commit dirs — the schema-evolution
+    * read: commits written before a column existed surface it as NULL.
+    * Off by default because schema merging footer-reads every file up
+    * front; turn it on only for tables that actually evolved. */
   def read(spark: SparkSession, dir: String,
            version: Option[Int] = None,
            mergeSchema: Boolean = false): DataFrame = {
-    val v = version.getOrElse(latestVersion(spark, dir))
-    require(v > 0, s"table at $dir has no commits")
-    val dirs = liveDirs(spark, dir, v).map(d => new Path(dir, d).toString)
+    val dirs = liveDirs(spark, dir, resolve(spark, dir, version))
+      .map(d => new Path(dir, d).toString)
     val r = spark.read
     (if (mergeSchema) r.option("mergeSchema", "true") else r).parquet(dirs: _*)
   }
@@ -733,16 +684,47 @@ object Snapshots {
 
   private val StatsDir = "_stats"
 
+  /** Committed `version` (default: latest); the table must have one. */
+  private def resolve(spark: SparkSession, dir: String,
+                      version: Option[Int]): Int = {
+    val v = version.getOrElse(latestVersion(spark, dir))
+    require(v > 0, s"table at $dir has no commits")
+    v
+  }
+
+  /** One per-commit-dir cache family: `_stats/<dirName>.<tag>.parquet`
+    * for every dir live at version `v`, in manifest order. Commit dirs
+    * are immutable, so each dir's cache is built once, ever, by `build`
+    * over that dir's path; a run after k new commits builds only those
+    * k — O(delta) upkeep. A cache is reused only when its write
+    * finished ([[Commit.complete]]): an interrupted writer's leftover is
+    * rebuilt, never read as an empty cache. Caches of vacuumed dirs are
+    * reclaimed by [[vacuum]]. */
+  private def dirCaches(spark: SparkSession, dir: String, v: Int,
+                        tag: String)(build: String => DataFrame): Seq[String] = {
+    val f = fs(spark, dir)
+    val entries = liveDirs(spark, dir, v).map(d =>
+      d -> new Path(dir, s"$StatsDir/${d.stripPrefix(s"$DataDir/")}.$tag.parquet"))
+    fillDirCaches(entries.collect { case (d, sp) if !Commit.complete(f, sp) =>
+      () => writeCache(build(new Path(dir, d).toString), sp)
+    })
+    entries.map(_._2.toString)
+  }
+
+  private def writeCache(df: DataFrame, path: Path): Unit = {
+    df.write.mode("overwrite").parquet(path.toString)
+    Commit.fault("Snapshots.cache")
+  }
+
   /** Run the MISSING per-dir cache writers, overlapping the independent
     * single-dir jobs on a small thread pool — the guide-§2.6 shape:
     * each writer is one bounded Spark job against one immutable commit
     * dir writing one cache file, so concurrent submission lets the
     * scheduler back-fill the tail instead of paying k sequential
-    * job-latency floors for k new commits. Shared by every per-dir
-    * cache family (stats/bloom/kmv/kll/ann); the cache discipline
-    * itself (immutable dirs ⇒ compute once, ever) is unchanged, and
-    * distinct target paths make the writers trivially independent.
-    * Failures rethrow their cause so callers see the original error. */
+    * job-latency floors for k new commits. Distinct target paths make
+    * the writers independent. The first failure is rethrown as its
+    * original cause; a failure while stopping the siblings is attached
+    * to it, never in its place. */
   private def fillDirCaches(writers: Seq[() => Unit]): Unit =
     if (writers.sizeIs <= 1) writers.foreach(_.apply())
     else {
@@ -752,89 +734,58 @@ object Snapshots {
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = w()
         }))
-      try {
-        futs.foreach { fut =>
-          try fut.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          }
+      Commit.withCleanup(futs.foreach { fut =>
+        try fut.get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            throw Option(e.getCause).getOrElse(e)
         }
-      } catch {
-        case t: Throwable =>
-          // a failed writer must not leave siblings running after the
-          // caller has thrown (they could race a retry or keep writing
-          // under a session being torn down): cancel everything still
-          // queued and WAIT for in-flight writers to finish before
-          // rethrowing the first cause
-          futs.foreach(_.cancel(false))
-          pool.shutdown()
-          pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-          throw t
-      } finally pool.shutdown()
+      }) {
+        // a failed writer must not leave siblings running after the
+        // caller has thrown (they could race a retry or keep writing
+        // under a session being torn down): cancel everything still
+        // queued and WAIT for in-flight writers to finish
+        futs.foreach(_.cancel(false))
+        pool.shutdown()
+        pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+      }
     }
 
   /** Per-file min/max/null-count stats for the table's live files,
-    * maintained INCREMENTALLY: commit dirs are immutable, so each dir's
-    * stats are computed once, cached as
-    * `_stats/<dirName>.<colsHash>.parquet`, and reused forever; a run
-    * after k new commits stats only those k dirs — O(delta) upkeep,
-    * the cost model of Delta's stats-in-log. Returns the live
-    * manifest (one row per live data file) for
+    * cached per commit dir (`_stats/<dirName>.<colsHash>.parquet`, see
+    * [[dirCaches]]) — the cost model of Delta's stats-in-log. Returns
+    * the live manifest (one row per live data file) for
     * [[DataSkipping.selectFiles]]-style pruning; [[skipRead]] is the
     * packaged read path. The cols hash keys the cache so different
-    * stat-column sets never collide. Stats of vacuumed dirs are
-    * reclaimed by [[vacuum]]. */
+    * stat-column sets never collide. */
   def statsManifest(spark: SparkSession, dir: String, statCols: Seq[String],
                     version: Option[Int] = None): DataFrame = {
     require(statCols.nonEmpty, "statsManifest needs at least one stat column")
-    val v = version.getOrElse(latestVersion(spark, dir))
-    require(v > 0, s"table at $dir has no commits")
-    val f = fs(spark, dir)
-    f.mkdirs(new Path(dir, StatsDir))
     val colsHash = java.lang.Integer.toHexString(statCols.mkString(",").hashCode)
-    val entries = liveDirs(spark, dir, v).map { d =>
-      val name = d.stripPrefix(s"$DataDir/")
-      (d, new Path(dir, s"$StatsDir/$name.$colsHash.parquet"))
-    }
-    fillDirCaches(entries.collect { case (d, sp) if !f.exists(sp) => () =>
-      DataSkipping.buildManifest(spark, new Path(dir, d).toString, statCols)
-        .write.mode("overwrite").parquet(sp.toString)
-    })
-    spark.read.parquet(entries.map(_._2.toString): _*)
+    spark.read.parquet(dirCaches(spark, dir, resolve(spark, dir, version),
+      colsHash)(DataSkipping.buildManifest(spark, _, statCols)): _*)
   }
 
-  /** Per-commit-dir KMV distinct sketch of `valueCol`, cached with the
-    * [[statsManifest]] discipline (`_stats/<dir>.kmv-….parquet` —
-    * immutable dirs ⇒ each commit is sketched exactly once, ever).
-    * Because bottom-k sketches merge EXACTLY
-    * ([[graft.ext.Sketches.kmvMerge]] bottom-k-of-union law), the fold
-    * over per-dir sketches is bit-identical to sketching the whole
-    * table — so a "distinct users over the last 90 days" question
-    * against a 100 TB snapshot table reads ≤ k·|dirs| longs instead of
-    * the table, and k new commits cost k small sketch jobs.
+  /** Per-commit-dir KMV distinct sketch of `valueCol`, cached as
+    * `_stats/<dir>.kmv-….parquet` ([[dirCaches]]). Because bottom-k
+    * sketches merge EXACTLY ([[graft.ext.Sketches.kmvMerge]]
+    * bottom-k-of-union law), the fold over per-dir sketches is
+    * bit-identical to sketching the whole table — so a "distinct users
+    * over the last 90 days" question against a 100 TB snapshot table
+    * reads ≤ k·|dirs| longs instead of the table, and k new commits
+    * cost k small sketch jobs.
     * Returns one row: `(kmv array<long>, distinct_est)`. */
   def distinctSketch(spark: SparkSession, dir: String, valueCol: String,
                      k: Int = 256, version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(latestVersion(spark, dir))
-    require(v > 0, s"table at $dir has no commits")
-    val f = fs(spark, dir)
-    f.mkdirs(new Path(dir, StatsDir))
-    val tag = s"kmv-$valueCol-$k"
-    val entries = liveDirs(spark, dir, v).map { d =>
-      val name = d.stripPrefix(s"$DataDir/")
-      (d, new Path(dir, s"$StatsDir/$name.$tag.parquet"))
-    }
-    fillDirCaches(entries.collect { case (d, sp) if !f.exists(sp) => () =>
+    val caches = dirCaches(spark, dir, resolve(spark, dir, version),
+        s"kmv-$valueCol-$k") { d =>
       graft.ext.Sketches.kmvSketch(
-          spark.read.parquet(new Path(dir, d).toString)
-            .select(org.apache.spark.sql.functions.lit(1).as("_g"),
-              org.apache.spark.sql.functions.col(valueCol)),
-          Seq("_g"), valueCol, k)
-        .write.mode("overwrite").parquet(sp.toString)
-    })
+        spark.read.parquet(d).select(org.apache.spark.sql.functions.lit(1).as("_g"),
+          org.apache.spark.sql.functions.col(valueCol)),
+        Seq("_g"), valueCol, k)
+    }
     val merged = graft.ext.Sketches.kmvMerge(
-      Seq(spark.read.parquet(entries.map(_._2.toString): _*)), Seq("_g"), k)
+      Seq(spark.read.parquet(caches: _*)), Seq("_g"), k)
     graft.ext.Sketches.kmvEstimate(merged, k).drop("_g")
   }
 
@@ -854,23 +805,14 @@ object Snapshots {
                      interpolate: Boolean = false): DataFrame = {
     import spark.implicits._
     require(qs.nonEmpty, "need at least one quantile")
-    val v = version.getOrElse(latestVersion(spark, dir))
-    require(v > 0, s"table at $dir has no commits")
-    val f = fs(spark, dir)
-    f.mkdirs(new Path(dir, StatsDir))
-    val tag = s"kll-$valueCol-$k"
-    val entries = liveDirs(spark, dir, v).map { d =>
-      val name = d.stripPrefix(s"$DataDir/")
-      (d, new Path(dir, s"$StatsDir/$name.$tag.parquet"))
-    }
-    fillDirCaches(entries.collect { case (d, sp) if !f.exists(sp) => () =>
-      spark.read.parquet(new Path(dir, d).toString)
+    val caches = dirCaches(spark, dir, resolve(spark, dir, version),
+        s"kll-$valueCol-$k") { d =>
+      spark.read.parquet(d)
         .agg(graft.functions.GraftFunctions.kllSketch(spark,
           org.apache.spark.sql.functions.col(valueCol).cast("double"), k)
           .as("sketch"))
-        .write.mode("overwrite").parquet(sp.toString)
-    })
-    val bufs = spark.read.parquet(entries.map(_._2.toString): _*).collect()
+    }
+    val bufs = spark.read.parquet(caches: _*).collect()
       .map(_.getAs[Array[Byte]]("sketch"))
       .map(graft.functions.KllQuantiles.Buf.deserialize(k, _))
       .filter(_.n > 0)
@@ -905,32 +847,24 @@ object Snapshots {
     *
     * The per-dir cache tag embeds a content hash of the centroids: if
     * the cached quantizer is ever removed or re-fit, stale assignments
-    * can never be silently reused (they re-key). Assignment caches of
-    * vacuumed dirs are reclaimed by [[vacuum]] like any other stats
-    * file. At 100 TB the caches ARE the index layout (the embedding
-    * bytes relaid by cluster); production would additionally
-    * `partitionBy(cluster)` each cache so probes prune partitions —
-    * kept flat here because multi-root partition-discovery reads
-    * require a shared basePath. */
+    * can never be silently reused (they re-key). At 100 TB the caches
+    * ARE the index layout (the embedding bytes relaid by cluster);
+    * production would additionally `partitionBy(cluster)` each cache so
+    * probes prune partitions — kept flat here because multi-root
+    * partition-discovery reads require a shared basePath. */
   def annIndex(spark: SparkSession, dir: String, embCol: String,
                idCol: String, k: Int = 16, seed: Long = 42L,
                version: Option[Int] = None): graft.ext.IvfIndex.Model = {
     import graft.ext.IvfIndex
-    val v = version.getOrElse(latestVersion(spark, dir))
-    require(v > 0, s"table at $dir has no commits")
-    val f = fs(spark, dir)
-    f.mkdirs(new Path(dir, StatsDir))
-    val annRoot = new Path(dir, "_ann")
-    f.mkdirs(annRoot)
-    val centPath = new Path(annRoot, s"centroids-$embCol-$k-$seed.parquet")
+    val v = resolve(spark, dir, version)
+    val centPath = new Path(dir, s"_ann/centroids-$embCol-$k-$seed.parquet")
     val (centroids, fitRows) =
-      if (!f.exists(centPath)) {
+      if (!Commit.complete(fs(spark, dir), centPath)) {
         val m = IvfIndex.fit(read(spark, dir, Some(v)), embCol, idCol, k, seed)
         import spark.implicits._
-        m.centroids.toSeq.zipWithIndex
+        writeCache(m.centroids.toSeq.zipWithIndex
           .map { case (c, i) => (i, c.toSeq, m.fitRows) }
-          .toDF("i", "c", "fit_rows")
-          .write.mode("overwrite").parquet(centPath.toString)
+          .toDF("i", "c", "fit_rows"), centPath)
         (m.centroids, m.fitRows)
       } else {
         val rows = spark.read.parquet(centPath.toString).orderBy("i").collect()
@@ -943,44 +877,23 @@ object Snapshots {
         centroids.map(_.mkString(",")).mkString(";").getBytes("UTF-8"))
       bytes.take(4).map("%02x".format(_)).mkString
     }
-    val tag = s"ann-$embCol-$k-$centHash"
-    val entries = liveDirs(spark, dir, v).map { d =>
-      val name = d.stripPrefix(s"$DataDir/")
-      (d, new Path(dir, s"$StatsDir/$name.$tag.parquet"))
-    }
-    fillDirCaches(entries.collect { case (d, sp) if !f.exists(sp) => () =>
-      IvfIndex.assign(centroids,
-          spark.read.parquet(new Path(dir, d).toString), embCol, idCol)
-        .write.mode("overwrite").parquet(sp.toString)
-    })
-    IvfIndex.Model(centroids,
-      spark.read.parquet(entries.map(_._2.toString): _*), fitRows)
+    val caches = dirCaches(spark, dir, v, s"ann-$embCol-$k-$centHash")(d =>
+      IvfIndex.assign(centroids, spark.read.parquet(d), embCol, idCol))
+    IvfIndex.Model(centroids, spark.read.parquet(caches: _*), fitRows)
   }
 
-  /** Per-file bloom membership index over the table's live files, with
-    * the same incremental per-commit-dir cache discipline as
-    * [[statsManifest]] (`_stats/<dir>.bloom-<keyCol>-….parquet`) — the
-    * point-lookup complement: hash-distributed keys make min/max bands
-    * useless, the bloom says which files MIGHT hold a key. */
+  /** Per-file bloom membership index over the table's live files, cached
+    * per commit dir like [[statsManifest]]
+    * (`_stats/<dir>.bloom-<keyCol>-….parquet`) — the point-lookup
+    * complement: hash-distributed keys make min/max bands useless, the
+    * bloom says which files MIGHT hold a key. */
   def bloomManifest(spark: SparkSession, dir: String, keyCol: String,
                     expectedPerFile: Long = 1 << 20, fpp: Double = 0.03,
                     version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(latestVersion(spark, dir))
-    require(v > 0, s"table at $dir has no commits")
-    val f = fs(spark, dir)
-    f.mkdirs(new Path(dir, StatsDir))
     val tag = s"bloom-$keyCol-$expectedPerFile-" +
       java.lang.Integer.toHexString(fpp.toString.hashCode)
-    val entries = liveDirs(spark, dir, v).map { d =>
-      val name = d.stripPrefix(s"$DataDir/")
-      (d, new Path(dir, s"$StatsDir/$name.$tag.parquet"))
-    }
-    fillDirCaches(entries.collect { case (d, sp) if !f.exists(sp) => () =>
-      DataSkipping.buildBloomManifest(spark, new Path(dir, d).toString,
-          keyCol, expectedPerFile, fpp)
-        .write.mode("overwrite").parquet(sp.toString)
-    })
-    spark.read.parquet(entries.map(_._2.toString): _*)
+    spark.read.parquet(dirCaches(spark, dir, resolve(spark, dir, version), tag)(
+      DataSkipping.buildBloomManifest(spark, _, keyCol, expectedPerFile, fpp)): _*)
   }
 
   /** Bloom-pruned point lookup on the snapshot table — identical to
@@ -1039,7 +952,7 @@ object Snapshots {
     val referenced =
       keep.flatMap(v => liveDirs(spark, dir, v)).toSet
     versions(spark, dir).filter(_ < keepFromVersion)
-      .foreach(v => f.delete(manifestPath(dir, v), false))
+      .foreach(v => Commit.delete(f, manifestPath(dir, v), recursive = false))
     val cutoff = System.currentTimeMillis() - retentionMs
     // crashed committers leave .tmp-* manifests that versionOf already
     // hides from readers; reclaim them once they age past the window
@@ -1047,7 +960,7 @@ object Snapshots {
     if (f.exists(log)) f.listStatus(log).iterator
       .filter(s => s.getPath.getName.startsWith(".tmp-") &&
         s.getModificationTime < cutoff)
-      .foreach(s => f.delete(s.getPath, false))
+      .foreach(s => Commit.delete(f, s.getPath, recursive = false))
     val dataRoot = new Path(dir, DataDir)
     val orphans =
       if (!f.exists(dataRoot)) Array.empty[Path]
@@ -1055,7 +968,7 @@ object Snapshots {
         .filter(s => !referenced.contains(s"$DataDir/${s.getPath.getName}") &&
           s.getModificationTime < cutoff)
         .map(_.getPath)
-    orphans.foreach(p => f.delete(p, true))
+    orphans.foreach(Commit.delete(f, _))
     // stats of vacuumed dirs are dead weight: a stats file's dir name
     // is everything before the first '.' (dir names never contain one)
     val statsRoot = new Path(dir, StatsDir)
@@ -1065,7 +978,7 @@ object Snapshots {
         !referenced.contains(s"$DataDir/$dirName") &&
           s.getModificationTime < cutoff
       }
-      .foreach(s => f.delete(s.getPath, true))
+      .foreach(s => Commit.delete(f, s.getPath))
     orphans.length
   }
 }

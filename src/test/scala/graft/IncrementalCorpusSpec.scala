@@ -108,15 +108,15 @@ class IncrementalCorpusSpec extends AnyFunSuite {
           IncrementalCorpus.applyDelta(batch0.toDF("id", "t"), 0, r2, cfg,
             vocabDf, benchDf, "text")
           val once = new java.util.concurrent.atomic.AtomicBoolean(true)
-          IncrementalCorpus.faultHook.set(p =>
-            if (p == point && once.getAndSet(false))
+          graft.warehouse.Commit.faultHook.set(p =>
+            if (p == s"IncrementalCorpus.$point" && once.getAndSet(false))
               throw new RuntimeException(s"injected crash at $point"))
           try {
             intercept[RuntimeException] {
               IncrementalCorpus.applyDelta(batch1.toDF("id", "t"), 1, r2,
                 cfg, vocabDf, benchDf, "text")
             }
-          } finally IncrementalCorpus.faultHook.set(_ => ())
+          } finally graft.warehouse.Commit.faultHook.set(_ => ())
           // marker never landed → the batch is invisible to readers…
           assert(accepted(r2) == expected.filter(_._2 == 0L),
             s"uncommitted batch visible after $point crash")
@@ -327,14 +327,14 @@ class IncrementalCorpusSpec extends AnyFunSuite {
           Seq((7L, 1L)).toDF("id", "ingest_batch"), 0L, root, cfg)
         val before = accepted(root)
         val once = new java.util.concurrent.atomic.AtomicBoolean(true)
-        IncrementalCorpus.faultHook.set(p =>
-          if (p == point && once.getAndSet(false))
+        graft.warehouse.Commit.faultHook.set(p =>
+          if (p == s"IncrementalCorpus.$point" && once.getAndSet(false))
             throw new RuntimeException(s"injected crash at $point"))
         try {
           intercept[RuntimeException] {
             IncrementalCorpus.compact(spark, root, cfg, 0L)
           }
-        } finally IncrementalCorpus.faultHook.set(_ => ())
+        } finally graft.warehouse.Commit.faultHook.set(_ => ())
         assert(accepted(root) == before,
           s"reads diverged after a $point crash")
         IncrementalCorpus.compact(spark, root, cfg, 0L)

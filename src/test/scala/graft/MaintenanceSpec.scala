@@ -430,8 +430,8 @@ class MaintenanceSpec extends AnyFunSuite {
       val mvDir = Files.createTempDirectory(s"graft-fault").toString + "/mv"
       apply1(mvDir, 0, 0) // batch 0 applies cleanly
       val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
-      IncrementalMv.faultHook.set(p =>
-        if (p == landing && armed.getAndSet(false))
+      graft.warehouse.Commit.faultHook.set(p =>
+        if (p == s"IncrementalMv.$landing" && armed.getAndSet(false))
           throw new RuntimeException(s"injected fault at $landing"))
       try {
         val e = intercept[RuntimeException](apply1(mvDir, 1, 1))
@@ -471,7 +471,7 @@ class MaintenanceSpec extends AnyFunSuite {
         apply1(mvDir, 1, 1)
         assert(serve(mvDir) == batch,
           s"$landing: a replay of a committed batch must be a no-op")
-      } finally IncrementalMv.faultHook.set(_ => ())
+      } finally graft.warehouse.Commit.faultHook.set(_ => ())
     }
   }
 

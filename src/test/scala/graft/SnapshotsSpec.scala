@@ -721,4 +721,73 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters: [IsNotNull(id), GreaterThan(id,90)]"),
       s"filter not pushed to the snapshot scan:\n$plan")
   }
+
+  // Per-commit-dir caches against an interrupted writer: after each
+  // cache family is built once, the second commit dir's caches (and the
+  // ANN centroids) are replaced by what a writer killed mid-job leaves
+  // behind, `<cache>.parquet/_temporary/0`. The next call must rebuild
+  // them and answer exactly like the uncached spelling; reading the
+  // leftover as a finished cache drops the second commit's rows.
+  private val interruptedCaches: Seq[(String, String => Any, String => Any)] = {
+    import graft.ext.{IvfIndex, Sketches}
+    import graft.warehouse.DataSkipping.Band
+    def ids(d: org.apache.spark.sql.DataFrame) =
+      d.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    def exactQuantiles(dir: String) = {
+      val v = ids(Snapshots.read(spark, dir))
+      Seq(0.5, 0.9).map(q => v(math.ceil(q * v.size).toInt - 1).toDouble)
+    }
+    def ann(m: IvfIndex.Model) = (m.centroids.map(_.toSeq).toSeq,
+      m.assigned.select("id", "cluster").collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSet)
+    Seq(
+      ("skipRead",
+        dir => ids(Snapshots.skipRead(spark, dir, Seq(Band("id", Some(0L), Some(199L))))),
+        dir => ids(Snapshots.read(spark, dir).filter(col("id").between(0, 199)))),
+      ("pointSkipRead",
+        dir => ids(Snapshots.pointSkipRead(spark, dir, "id", Seq(5L, 150L),
+          expectedPerFile = 256, fpp = 0.01)),
+        dir => ids(Snapshots.read(spark, dir).filter(col("id").isin(5L, 150L)))),
+      ("distinctSketch",
+        dir => Snapshots.distinctSketch(spark, dir, "id", k = 512)
+          .select("distinct_est").head.getDouble(0),
+        dir => Sketches.kmvEstimate(Sketches.kmvSketch(Snapshots.read(spark, dir)
+            .withColumn("_g", lit(1)), Seq("_g"), "id", 512), 512)
+          .select("distinct_est").head.getDouble(0)),
+      ("quantileSketch",
+        dir => Snapshots.quantileSketch(spark, dir, "id", Seq(0.5, 0.9))
+          .orderBy("qi").collect().map(_.getDouble(1)).toSeq,
+        exactQuantiles),
+      ("annIndex",
+        dir => ann(Snapshots.annIndex(spark, dir, "emb", "id", k = 4)),
+        dir => ann(IvfIndex.fit(Snapshots.read(spark, dir), "emb", "id", k = 4))))
+  }
+
+  interruptedCaches.foreach { case (name, cached, uncached) =>
+    test(s"$name rebuilds a cache an interrupted writer left, never reads it") {
+      val dir = freshDir()
+      Seq(0L -> 100L, 100L -> 200L).foreach { case (lo, hi) =>
+        Snapshots.append(spark, dir, spark.range(lo, hi).toDF("id")
+          .withColumn("emb", array((col("id") % 7).cast("double"),
+            (col("id") % 11).cast("double")))
+          .coalesce(1))
+      }
+      val expected = uncached(dir)
+      assert(cached(dir) === expected)
+      val second = Snapshots.liveDirs(spark, dir, 2).last.stripPrefix("data/")
+      val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val seeded = Seq(new Path(dir, "_stats"), new Path(dir, "_ann"))
+        .filter(f.exists).flatMap(f.listStatus(_)).map(_.getPath)
+        .filter(p => p.getParent.getName == "_ann" ||
+          p.getName.startsWith(s"$second."))
+      assert(seeded.nonEmpty)
+      seeded.foreach { p =>
+        f.delete(p, true)
+        f.mkdirs(new Path(p, "_temporary/0"))
+      }
+      assert(cached(dir) === expected,
+        s"$name read an interrupted writer's cache as a finished one")
+      seeded.foreach(p => assert(f.exists(new Path(p, "_SUCCESS"))))
+    }
+  }
 }
